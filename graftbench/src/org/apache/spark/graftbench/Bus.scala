@@ -1,0 +1,12 @@
+package org.apache.spark.graftbench
+
+import org.apache.spark.SparkContext
+
+/** Access to the listener bus, which Spark keeps package-private. */
+object Bus {
+
+  /** Blocks until every posted listener event has been delivered, so
+    * counters read afterwards include the last job's tasks.
+    */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
