@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Bloom-membership probe against a BROADCAST filter — the
@@ -22,7 +22,10 @@ import org.apache.spark.util.sketch.BloomFilter
   * probe; what mattered was removing the per-row boxing.
   */
 case class BloomContains(child: Expression, bc: Broadcast[BloomFilter])
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
+  // the shingle hash is a long: anything else fails at analysis instead
+  // of as a ClassCastException inside the probe
+  override def inputTypes: Seq[DataType] = Seq(LongType)
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = child.nullable
   override def prettyName: String = "bloom_contains"

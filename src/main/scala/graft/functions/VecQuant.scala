@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, LongType}
@@ -363,7 +363,10 @@ case class UnpackBytes(child: Expression) extends UnaryExpression {
 
 /** See [[VecQuant.sub]]. */
 case class VecSub(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ExpectsInputTypes {
+  // a mis-typed vector fails at analysis, not as an executor cast error
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def nullable: Boolean = true
   override def prettyName: String = "vec_sub"
@@ -415,7 +418,10 @@ case class VecSub(left: Expression, right: Expression)
 case class SqReconstruct(first: Expression, second: Expression,
                          third: Expression)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType), BinaryType, DoubleType)
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def nullable: Boolean = true
   override def prettyName: String = "sq_reconstruct"

@@ -130,8 +130,6 @@ object Index {
     else committed.maxBy(_._1)._2.toString
   }
 
-  private def postingsPath(path: String) = s"$path/$PostingsKind"
-  private def pqCodesPath(path: String) = s"$path/$PqCodesKind"
   private def metaPath(path: String) = s"$path/meta"
   private def ivfMetaPath(path: String) = s"$path/ivf_meta"
 
@@ -151,7 +149,7 @@ object Index {
     * `residual`); stores written before the marker existed are absolute.
     */
   private[graft] def isResidual(spark: SparkSession, path: String): Boolean =
-    buildMetaOf(readMetaRow(spark, metaPath(path))).residual
+    readBuildMeta(spark, metaPath(path)).residual
 
   /** A store's build configuration, read back from its marker table —
     * what [[rebuild]] must re-invoke the save with. Markers written
@@ -199,24 +197,26 @@ object Index {
   private def readBuildMeta(spark: SparkSession, dir: String): BuildMeta =
     buildMetaOf(readMetaRow(spark, dir))
 
-  /** The store's recorded assignment mode — flat (`forceFlat` build) or
-    * two-level past [[Similarity.twoLevelMinCells]]. Appends and the
-    * rebuild must route arriving vectors the way the build routed the
-    * corpus: a flat-built 400-cell store whose appends route two-level
-    * parks vectors in cells the flat query probe never reads (whole
-    * families off-macro — measured recall 0.0 on the 1000× family
-    * fixture, SCALING.md). Marker ownership mirrors [[rebuild]]'s:
-    * the PQ marker if present, else SQ, else IVF.
+  /** The marker owning the store's coarse geometry, as (marker dir, its
+    * build config) from ONE marker read — ownership mirrors
+    * [[rebuild]]'s: the PQ marker if present, else SQ, else IVF. Its
+    * `flat` is the recorded assignment mode — flat (`forceFlat` build)
+    * or two-level past [[Similarity.twoLevelMinCells]]. Appends must
+    * route arriving vectors the way the build routed the corpus: a
+    * flat-built 400-cell store whose appends route two-level parks
+    * vectors in cells the flat query probe never reads (whole families
+    * off-macro — measured recall 0.0 on the 1000× family fixture,
+    * SCALING.md). The same row answers the PQ/SQ residual flag when that
+    * flavor owns the marker, so an append reads its marker once.
     */
-  private def storedFlat(spark: SparkSession, path: String): Boolean = {
+  private def geometryMarker(spark: SparkSession,
+                             path: String): (String, BuildMeta) = {
     def exists(dir: String) = {
       val p = new org.apache.hadoop.fs.Path(dir)
       fsOf(spark, p).exists(p)
     }
-    val markerDir =
-      if (exists(metaPath(path))) metaPath(path)
-      else if (exists(sqMetaPath(path))) sqMetaPath(path)
-      else ivfMetaPath(path)
+    val markerDir = Seq(metaPath(path), sqMetaPath(path)).find(exists)
+      .getOrElse(ivfMetaPath(path))
     // ONE marker read serves both the legacy-column check and the meta
     // row (reading it twice doubled the per-op marker cost on every
     // append/rebuild path — the round-14 lifecycle regression's prime
@@ -240,15 +240,19 @@ object Index {
         "two-level routing — if it was built forceFlat = true, appends " +
         "and rebuilds will route two-level and miss the flat probe set " +
         "(recall collapse). Rebuild the store to stamp its mode.")
-    buildMetaOf(meta).flat
+    (markerDir, buildMetaOf(meta))
   }
 
-  /** The `twoLevelMin` an append's frozen-centroid assignment must use
-    * so it routes exactly like the build did.
+  /** Whether the store has a committed generation of `kind`. */
+  private def hasLive(spark: SparkSession, path: String,
+                      kind: String): Boolean =
+    generations(spark, path, kind).exists { case (_, p) => isCommitted(spark, p) }
+
+  /** The data kind store-wide reads (stats, deletes, maintenance) resolve
+    * through: the raw postings if present, else the PQ codes, else SQ.
     */
-  private def appendTwoLevelMin(spark: SparkSession, path: String): Int =
-    if (storedFlat(spark, path)) Int.MaxValue
-    else Similarity.twoLevelMinCells
+  private def primaryKind(spark: SparkSession, path: String): Option[String] =
+    Seq(PostingsKind, PqCodesKind, SqCodesKind).find(hasLive(spark, path, _))
 
   /** The non-metadata columns of each store flavor — everything else in a
     * stored schema is caller metadata persisted via `metaCols`.
@@ -298,42 +302,243 @@ object Index {
     stored
   }
 
-  /** The corpus assignment both index flavors persist: (vec_id, v, norm,
-    * cell) from the shared coarse-quantizer pass ([[Similarity.ivfAssign]]
-    * semantics: two-level past the activation threshold unless
-    * `forceFlat`).
+  /** Coarse centroids resolved once per write, driver-side:
+    * (cid, cv, cn) in cid order — the assignment's ranking table and the
+    * residual coders' subtrahend.
     */
-  /** `cells` is the RESOLVED cell count — every caller already computed
-    * `autoCells(emb.count(), …)` to write its markers, and re-counting
-    * here doubled the build's full-corpus scans (profiled: two `count`
-    * jobs per save*).
-    */
-  private def assigned(emb: DataFrame, cells: Int, forceFlat: Boolean,
-                       superProbe: Int): DataFrame = {
-    val e = Similarity.normed(emb)
-    Similarity.withCellRanks(e, cells, 1,
-      twoLevelMin = if (forceFlat) Int.MaxValue else Similarity.twoLevelMinCells,
-      superProbe = superProbe)
-      .select(col("vec_id"), col("v"), col("norm"),
-        element_at(col("cells"), 1).as("cell"))
-  }
+  private type Cents = Array[(Long, Array[Double], Double)]
 
-  /** Corpus assignment against the JUST-PERSISTED centroid table (the
-    * trained-build path: centroids are not corpus rows, so the
-    * assignment must rank against the stored table — the same
-    * `seedFrom` pass every append uses).
+  /** A dense flavor's encoder — the ONE write step that differs between
+    * store flavors: how assigned rows (vec_id, v, norm, cell) become the
+    * stored rows of its data kind. Everything around it (centroid
+    * resolution, assignment, metadata join-back, the seq stamp and the
+    * cell-partitioned write) is the shared pipeline of [[buildStore]] and
+    * [[appendStore]].
     */
-  private def assignedTo(emb: DataFrame, path: String, forceFlat: Boolean,
-                         superProbe: Int): DataFrame = {
-    val spark = emb.sparkSession
-    val cents = Similarity.collectCentroids(
-      spark.read.parquet(centroidsDir(spark, path)))
+  private sealed abstract class Enc(val kind: String, val core: Set[String])
+  /** The raw flavor: the assignment itself. */
+  private case object Raw extends Enc(PostingsKind, postingsCore)
+  /** PQ codes against `codebook` (sub, code, cw); `residual` codes
+    * x − c[cell] instead of x.
+    */
+  private final case class Pq(codebook: DataFrame, residual: Boolean)
+      extends Enc(PqCodesKind, pqCodesCore)
+  /** Per-vector int8 codes of x, or of x − c[cell] when `residual`. */
+  private final case class Sq(residual: Boolean)
+      extends Enc(SqCodesKind, sqCodesCore)
+  /** The first-`dims` prefix, raw or int8-quantized — the MRL store's
+    * recorded build shape ([[mrlMeta]]).
+    */
+  private final case class Mrl(dims: Int, quantized: Boolean)
+      extends Enc(MrlCodesKind, if (quantized) sqCodesCore else mrlCodesCore)
+
+  /** Assign rows to cells: rank each normed vector against the resolved
+    * centroids ([[Similarity.ivfAssign]] semantics — two-level past the
+    * activation threshold unless the store is `flat`) and keep its first
+    * cell: (vec_id, v, norm, cell). Builds and appends share it, so an
+    * append against frozen centroids routes exactly like the build.
+    */
+  private def assign(emb: DataFrame, cents: Cents, flat: Boolean,
+                     superProbe: Int): DataFrame =
     Similarity.withCellRanks(Similarity.normed(emb), cents.length, 1,
-      twoLevelMin = if (forceFlat) Int.MaxValue else Similarity.twoLevelMinCells,
+      twoLevelMin = if (flat) Int.MaxValue else Similarity.twoLevelMinCells,
       superProbe = superProbe, seedArr = cents)
       .select(col("vec_id"), col("v"), col("norm"),
         element_at(col("cells"), 1).as("cell"))
+
+  /** x − c[cell] per assigned row, as (vec_id, v, cell) — the residual
+    * coders' input (FAISS by_residual): the broadcast centroid table is
+    * the driver-side one, so no centroid re-read.
+    */
+  private def residuals(a: DataFrame, cents: Cents): DataFrame = {
+    val spark = a.sparkSession
+    import spark.implicits._
+    val c = cents.toSeq.map { case (cid, cv, _) => (cid, cv.toSeq) }
+      .toDF("cell", "cv")
+    a.join(broadcast(c), "cell")
+      .select(col("vec_id"), VecQuant.sub(col("v"), col("cv")).as("v"),
+        col("cell"))
   }
+
+  /** Per-vector symmetric int8 quantization of vector column `x` —
+    * [[Similarity.int8TopK]]'s exact convention (scale = max|x|,
+    * q = floor(x·127/scale + 0.5), zero-vector conventions pinned). Adds
+    * `scale`/`safe_scale`; select [[sqBytes]] and a rescale factor from
+    * the result. Per-VECTOR scales mean an SQ flavor has no frozen
+    * corpus-level quantizer at all: appends quantize themselves.
+    */
+  private def withScale(df: DataFrame, x: String): DataFrame =
+    df.withColumn("scale", VecQuant.maxAbs(col(x)))
+      .withColumn("safe_scale",
+        when(col("scale") === 0d, lit(1.0)).otherwise(col("scale")))
+
+  /** The packed codes of `x` over [[withScale]]'s rows, one byte per dim. */
+  private def sqBytes(x: String): Column =
+    VecQuant.sqPack(col(x), col("safe_scale")).as("qb")
+
+  /** The absolute coding's stored rescale factor round(scale/norm, 9) —
+    * what turns the integer code dot into a rank-only cosine surrogate.
+    */
+  private def sqRescale(norm: Column): Column =
+    round(when(norm === 0d, lit(0.0)).otherwise(col("scale") / norm), 9)
+      .as("r")
+
+  /** Step 3 of the pipeline: encode assigned rows with the flavor's
+    * encoder.
+    *   - PQ: [[encodeCells]] over x (absolute) or x − c[cell] (residual).
+    *   - SQ absolute: r = round(scale/norm, 9), the integer-dot rescale.
+    *   - SQ residual: the int8 step shrinks from max|x|/127 (corpus scale)
+    *     to max|resid|/127 (CELL scale) with no trained codebook; stored
+    *     `r` is the residual scale itself (x̂ = c + qb·r/127).
+    *   - MRL: [[mrlRows]].
+    */
+  private def encode(enc: Enc, a: DataFrame, cents: Cents): DataFrame =
+    enc match {
+      case Raw => a
+      case Pq(codebook, residual) =>
+        encodeCells(a.sparkSession,
+          if (residual) residuals(a, cents) else a, codebook)
+      case Sq(false) =>
+        withScale(a, "v").select(col("vec_id"), col("cell"), sqBytes("v"),
+          sqRescale(col("norm")))
+      case Sq(true) =>
+        withScale(residuals(a, cents), "v").select(col("vec_id"),
+          col("cell"), sqBytes("v"), col("scale").as("r"))
+      case m: Mrl => mrlRows(a, m)
+    }
+
+  /** The MRL prefix rows at the recorded width and coding — raw:
+    * (vec_id, cell, vp, vpn), the first-`dims` slice and its norm exactly
+    * as [[Similarity.matryoshkaRecall]] truncates; quantized (MRL × SQ8):
+    * (vec_id, cell, qb, r), the prefix int8-coded with the absolute SQ
+    * conventions over the PREFIX (scale = max|prefix|, r = round(scale /
+    * prefixNorm, 9)) — one byte per kept dimension, so the shortlist
+    * reads ~dims/(8·fullDims) of the raw bytes. `src` carries (vec_id, v,
+    * cell); v IS `normed(emb)`'s column, so slice(v) equals the
+    * query-side slice of the embedding cast, bit-exact. Any non-core
+    * column of `src` (the metadata on re-read postings) rides along.
+    */
+  private def mrlRows(src: DataFrame, m: Mrl): DataFrame = {
+    val carry = src.columns.filterNot(postingsCore.contains).map(col).toSeq
+    val vp = slice(col("v"), 1, m.dims)
+    if (m.quantized)
+      withScale(src.withColumn("pv", vp)
+        .withColumn("pn", sqrt(VecFold.dot(col("pv"), col("pv")))), "pv")
+        .select(Seq(col("vec_id"), col("cell"), sqBytes("pv"),
+          sqRescale(col("pn"))) ++ carry: _*)
+    else
+      src.withColumn("vp", vp)
+        .select(Seq(col("vec_id"), col("cell"), col("vp"),
+          sqrt(VecFold.dot(col("vp"), col("vp"))).as("vpn")) ++ carry: _*)
+  }
+
+  /** Steps 4–5, the one cell-partitioned write every flavor shares: join
+    * the metadata back on vec_id, stamp the mutation seq, and repartition
+    * BY THE PARTITION COLUMN before writing — partitionBy alone emits one
+    * file per (task × cell) (12,800 ~65 KB files for 400 cells at the
+    * 1000× corpus, measured; 2B files at 200k cells). Hash-clustering on
+    * cell makes it one file per touched cell. (An over-large cell can
+    * still be split via spark.sql.files.maxRecordsPerFile.)
+    */
+  private def writeCells(rows: DataFrame, metaSrc: DataFrame,
+                         meta: Seq[String], seq: Long, mode: String,
+                         dir: String): Unit =
+    (if (meta.isEmpty) rows
+     else rows.join(metaSrc.select((Seq("vec_id") ++ meta).map(col): _*),
+       "vec_id"))
+      .withColumn("ins_seq", lit(seq))
+      .repartition(col("cell"))
+      .write.mode(mode).partitionBy("cell").parquet(dir)
+
+  /** The build half of the write pipeline — every save* and the staged
+    * [[rebuild]] run it:
+    *   1. resolve the coarse centroids — the deterministic smallest-id
+    *      seeds, or `trained` [[Similarity.kmeansCentroids]] (the build
+    *      pays `trainIters` extra corpus scans for cells that actually
+    *      tile the distribution; every downstream shape is unchanged) —
+    *      and persist them;
+    *   2. assign the corpus ONCE;
+    *   3–5. encode, join metadata, stamp and write each flavor `flavors`
+    *      names, in order, from that one assignment.
+    * `flavors` sees the assignment and centroids before any data kind is
+    * written (the PQ codebook trains there). An MRL flavor derives from
+    * the postings just written — they carry cell, v AND the metadata, so
+    * one pruned re-read replaces a second assignment pass and the join.
+    * `insSeq` stamps the build rows' mutation sequence — 0 for a fresh
+    * build (which also clears the mutation history); [[rebuild]] passes
+    * the store's bumped counter so rows republished into a store whose
+    * tombstones survive the flip outrank every existing `del_seq`.
+    */
+  private def buildStore(emb: DataFrame, path: String, nCells: Int,
+                         trained: Boolean, trainIters: Int,
+                         forceFlat: Boolean, superProbe: Int,
+                         metaCols: Seq[String], insSeq: Long)
+                        (flavors: (DataFrame, Cents) => Seq[Enc]): Unit = {
+    val spark = emb.sparkSession
+    retireQuantizerGenerations(spark, path)
+    val cells = Similarity.autoCells(emb.count(), nCells)
+    val centsDf =
+      if (trained) Similarity.kmeansCentroids(emb, cells, trainIters)
+      else Similarity.normed(emb).orderBy("vec_id").limit(cells)
+        .select(col("vec_id").as("cid"), col("v").as("cv"), col("norm").as("cn"))
+    centsDf.write.mode("overwrite").parquet(centroidsPath(path))
+    // rows arrive in cid order (the seeds' orderBy, kmeans' index order)
+    val cents: Cents = centsDf.collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
+    val a = assign(emb, cents, forceFlat, superProbe)
+    val encs = flavors(a, cents)
+    if (insSeq == 0L) // fresh build: no mutation history (a rebuild keeps it)
+      Tombstones.clear(spark, path)
+    encs.foreach { enc =>
+      val (rows, meta) = enc match {
+        case m: Mrl => (mrlRows(spark.read.parquet(s"$path/$PostingsKind"), m), Nil)
+        case _ => (encode(enc, a, cents), metaCols)
+      }
+      retireGenerations(spark, path, enc.kind) // in-place rebuild
+      writeCells(rows, emb, meta, insSeq, "overwrite", s"$path/${enc.kind}")
+    }
+  }
+
+  /** The append half of the write pipeline, shared by every append*:
+    * assign the batch against the store's FROZEN centroids, routed the
+    * way the build routed, encode each flavor `flavors` names from that
+    * one assignment, and fence-append them in order under ONE mutation
+    * seq. `flavors` gets the geometry marker ([[geometryMarker]]) so a
+    * flavor's coding flag costs no second marker read. Every kind's
+    * metadata set is derived from — and validated against — its own
+    * stored schema before anything is written: an append that omitted a
+    * build-time metadata column would write rows a filtered serve
+    * silently never matches.
+    */
+  private def appendStore(spark: SparkSession, path: String,
+                          newEmb: DataFrame, superProbe: Int,
+                          metaCols: Seq[String])
+                         (flavors: (String, BuildMeta) => Seq[Enc]): Unit = {
+    val cents = Similarity.collectCentroids(
+      spark.read.parquet(centroidsDir(spark, path)))
+    val (markerDir, geo) = geometryMarker(spark, path)
+    val encs = flavors(markerDir, geo)
+    val a = assign(newEmb, cents, geo.flat, superProbe)
+    val metas = encs.map(e =>
+      appendMetaCols(spark, liveDir(spark, path, e.kind), e.core, newEmb, metaCols))
+    // stamped AFTER any tombstone the caller just wrote ([[upsertIvf]]):
+    // the appended rows outrank it and serve; older rows stay masked
+    val seqNo = Tombstones.nextSeq(spark, path)
+    encs.zip(metas).foreach { case (enc, meta) =>
+      val rows = encode(enc, a, cents)
+      fencedAppend(spark, path, enc.kind) { dir =>
+        writeCells(rows, newEmb, meta, seqNo, "append", dir)
+      }
+    }
+  }
+
+  /** The raw flavor when the store carries it: a COMBINED store
+    * (saveIvfPq/saveIvfSq `withRaw`, or saveIvf sharing the path) keeps
+    * its refine flavor in step, so a rerank serve can refine appended
+    * candidates instead of silently dropping them at the refine join.
+    */
+  private def rawInStep(spark: SparkSession, path: String): Seq[Enc] =
+    if (generations(spark, path, PostingsKind).nonEmpty) Seq(Raw) else Nil
 
   /** Build + persist an IVF-Flat index of `emb` under `path`.
     * `metaCols` names extra `emb` columns to carry INTO the postings
@@ -342,13 +547,7 @@ object Index {
     * the postings parquet scan itself — candidates are cut at the
     * source, before any join, which is the only shape that survives a
     * low-selectivity filter at corpus scale (a post-join filter would
-    * materialize every candidate first).
-    */
-  /** `insSeq` stamps the build rows' mutation sequence — 0 for a fresh
-    * build; [[rebuild]] passes the store's bumped counter so rows
-    * republished into a store whose tombstones survive the flip (the
-    * reader-safe rebuild leaves them for the next compaction) outrank
-    * every existing `del_seq` instead of being silently re-masked.
+    * materialize every candidate first). `insSeq`: see [[buildStore]].
     */
   def saveIvf(emb: DataFrame, path: String, nCells: Int = 16,
               forceFlat: Boolean = false,
@@ -359,60 +558,31 @@ object Index {
               insSeq: Long = 0L): Unit =
     Lease.withLease(emb.sparkSession, path, "saveIvf") {
     import emb.sparkSession.implicits._
-    retireQuantizerGenerations(emb.sparkSession, path)
-    val cells = Similarity.autoCells(emb.count(), nCells)
     // the store self-describes its build configuration so [[rebuild]]
     // re-saves with the SAME coding instead of silently downgrading a
     // trained store to seeded centroids
     Seq((trained, trainIters, forceFlat))
       .toDF("trained", "train_iters", "flat")
       .write.mode("overwrite").parquet(ivfMetaPath(path))
-    // trained = true swaps the deterministic smallest-id seed centroids
-    // for [[Similarity.kmeansCentroids]] — the build pays iters extra
-    // corpus scans (the Lloyd rounds) for cells that actually tile the
-    // distribution; every downstream shape (store layout, probe ranking,
-    // appends against frozen centroids) is unchanged
-    val cents =
-      if (trained) Similarity.kmeansCentroids(emb, cells, trainIters)
-      else Similarity.normed(emb)
-        .orderBy("vec_id").limit(cells)
-        .select(col("vec_id").as("cid"), col("v").as("cv"), col("norm").as("cn"))
-    cents.write.mode("overwrite").parquet(centroidsPath(path))
-    // repartition BY THE PARTITION COLUMN before writing: partitionBy
-    // alone emits one file per (task × cell) — 12,800 ~65 KB files for
-    // 400 cells at the 1000× corpus (measured), 2B files at 200k cells.
-    // Hash-clustering on cell makes it one file per cell; a build is the
-    // one place a full-corpus shuffle is the right trade for a store
-    // that is read for weeks. (An over-large cell can still be split via
-    // spark.sql.files.maxRecordsPerFile.)
-    val post =
-      if (trained) assignedTo(emb, path, forceFlat, superProbe)
-      else assigned(emb, cells, forceFlat, superProbe)
-    val withMeta =
-      if (metaCols.isEmpty) post
-      else post.join(emb.select((Seq("vec_id") ++ metaCols).map(col): _*), "vec_id")
-    retireGenerations(emb.sparkSession, path, PostingsKind) // in-place rebuild
-    if (insSeq == 0L) // fresh build: no mutation history (a rebuild keeps it)
-      Tombstones.clear(emb.sparkSession, path)
-    withMeta
-      .withColumn("ins_seq", lit(insSeq)) // build rows: mutation seq 0
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(postingsPath(path))
+    buildStore(emb, path, nCells, trained, trainIters, forceFlat, superProbe,
+      metaCols, insSeq)((_, _) => Seq(Raw))
   }
 
   /** Build + persist the compressed IVF-PQ twin: cell-partitioned PQ
     * codes (the serving scan) plus the codebook. Codes and assignment are
     * the exact relations [[Similarity.ivfPqTopK]] builds inline
     * ([[Similarity.pqCodes]] + the shared coarse pass).
-    */
-  /** `withRaw = true` additionally persists the raw postings flavor from
+    *
+    * `withRaw = true` additionally persists the raw postings flavor from
     * the SAME assignment pass (one extra cell-partitioned write, no
     * second assignment scan) — the combined store the rerank serve
     * ([[ivfPqRerankTopKIndexed]]) reads: PQ codes for the ADC shortlist,
-    * co-located raw vectors for the exact refine.
-    */
-  /** `residual = true` is the FAISS-IVFPQ production coding: vectors are
+    * co-located raw vectors for the exact refine. It is written AFTER the
+    * codes, so a crash mid-build leaves at worst a codes-only store
+    * (ivfPqTopKIndexed still serves; rerank fails loudly on the missing
+    * postings, never silently).
+    *
+    * `residual = true` is the FAISS-IVFPQ production coding: vectors are
     * PQ-encoded as RESIDUALS against their assigned coarse centroid
     * (x − c[cell]) instead of absolute positions, and the serve builds
     * its ADC lookup table per (query, probed cell) over the query's own
@@ -441,57 +611,7 @@ object Index {
       "residual coding needs trained quantizers (the seeded residual " +
         "codebook is degenerate: smallest-id residuals under smallest-id " +
         "centroids are identically zero) — pass trained = true")
-    val spark = emb.sparkSession
-    import spark.implicits._
-    retireQuantizerGenerations(spark, path)
-    val cells = Similarity.autoCells(emb.count(), nCells)
-    val e = Similarity.normed(emb)
-    // trained = true upgrades BOTH quantizers: kmeans coarse centroids
-    // and pqTrain codebooks (per-subspace Lloyd) replace the smallest-id
-    // seeds — the build pays the training scans once, the serve path is
-    // byte-for-byte the same store contract. ann_ivfpq_trained_recall
-    // prices what the training buys.
-    val cents =
-      if (trained) Similarity.kmeansCentroids(emb, cells, trainIters)
-      else e.orderBy("vec_id").limit(cells)
-        .select(col("vec_id").as("cid"), col("v").as("cv"), col("norm").as("cn"))
-    cents.write.mode("overwrite").parquet(centroidsPath(path))
-    // assignment BEFORE the codebook: residual training consumes it
-    val assignment =
-      if (trained) assignedTo(emb, path, forceFlat, superProbe)
-      else assigned(emb, cells, forceFlat, superProbe)
-    // the residual table (vec_id, embedding = v − c[cell], cell) —
-    // codebook training input AND encode input under residual coding
-    // (cell rides along so the encode needs no re-attach join; the
-    // trainer's explicit column selects ignore it)
-    def residDf: DataFrame = assignment
-      .join(broadcast(spark.read.parquet(centroidsDir(spark, path))
-        .select(col("cid").as("cell"), col("cv"))), "cell")
-      .select(col("vec_id"),
-        VecQuant.sub(col("v"), col("cv")).as("embedding"),
-        col("cell"))
-    // codebook (codes are encoded against it): trained = pqTrain's
-    // dequantized Lloyd output — over residuals when residual coding is
-    // on, absolute vectors otherwise; seeded = the nCode smallest-id
-    // corpus vectors sliced per subspace — the same seed codewords
-    // pqCodes assigns against
-    val codebook =
-      if (residual) Similarity.pqTrainCodebook(residDf, nSub, nCode, trainIters)
-      else if (trained) Similarity.pqTrainCodebook(emb, nSub, nCode, trainIters)
-      else {
-        val seedCents: Array[(Long, Array[Double])] = e
-          .orderBy("vec_id").limit(nCode)
-          .select("vec_id", "v").collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        val dim = if (seedCents.nonEmpty) seedCents(0)._2.length else 0
-        val sub = dim / nSub
-        val cwRows = for {
-          m <- 0 until nSub
-          (cid, cv) <- seedCents
-        } yield (m.toLong, cid, cv.slice(m * sub, (m + 1) * sub).toSeq)
-        spark.createDataset(cwRows).toDF("sub", "code", "cw")
-      }
-    codebook.write.mode("overwrite").parquet(codewordsPath(path))
+    import emb.sparkSession.implicits._
     // the store self-describes its coding AND build geometry so every
     // serve/append resolves the coding from disk (a residual store served
     // with absolute LUTs would be silently garbage) and [[rebuild]]
@@ -500,64 +620,57 @@ object Index {
     Seq((residual, trained, nSub, nCode, trainIters, forceFlat))
       .toDF("residual", "trained", "n_sub", "n_code", "train_iters", "flat")
       .write.mode("overwrite").parquet(metaPath(path))
-    // seeded builds keep the pqCodes kernel (oracle-pinned); trained
-    // builds encode against the stored codebook with the same kernel
-    // appends use. All three encode the ASSIGNMENT's rows (v already
-    // normed, cell already attached) — the old shape re-scanned the
-    // corpus per encode and joined the cell back on vec_id.
-    val codesDf =
-      if (residual) encodeCells(spark,
-        residDf.select(col("vec_id"), col("embedding").as("v"), col("cell")),
-        spark.read.parquet(codewordsDir(spark, path)))
-      else if (trained) encodeCells(spark, assignment,
-        spark.read.parquet(codewordsDir(spark, path)))
-      else pqSeedCodesWithCell(assignment, nSub, nCode)
-    val withMeta =
-      if (metaCols.isEmpty) codesDf
-      else codesDf.join(emb.select((Seq("vec_id") ++ metaCols).map(col): _*), "vec_id")
-    retireGenerations(spark, path, PqCodesKind) // in-place rebuild
-    if (insSeq == 0L) // fresh build: no mutation history (a rebuild keeps it)
-      Tombstones.clear(spark, path)
-    withMeta
-      .withColumn("ins_seq", lit(insSeq)) // build rows: mutation seq 0
-      .repartition(col("cell")) // one file per cell (see saveIvf)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(pqCodesPath(path))
-    if (withRaw) {
-      // the refine flavor: same assignment, raw vectors, same cell grid —
-      // written AFTER the codes so a crash mid-build leaves at worst a
-      // codes-only store (ivfPqTopKIndexed still serves; rerank fails
-      // loudly on the missing postings, never silently)
-      val rawMeta =
-        if (metaCols.isEmpty) assignment
-        else assignment.join(
-          emb.select((Seq("vec_id") ++ metaCols).map(col): _*), "vec_id")
-      retireGenerations(spark, path, PostingsKind)
-      rawMeta
-        .withColumn("ins_seq", lit(insSeq))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(postingsPath(path))
+    buildStore(emb, path, nCells, trained, trainIters, forceFlat, superProbe,
+      metaCols, insSeq) { (a, cents) =>
+      Pq(pqCodebook(emb, path, a, cents, nSub, nCode, trained, trainIters,
+        residual), residual) +: (if (withRaw) Seq(Raw) else Nil)
     }
   }
 
-  /** PQ-encode `emb` against an EXPLICIT codeword table (sub, code, cw) —
-    * [[Similarity.pqCodes]]' rounding and tie semantics exactly
-    * (9-dp-rounded subspace L2, smaller code id wins ties). Shared by the
-    * frozen-codebook append path and the trained build (the codebook is
-    * the caller's choice; the encoding kernel is one). The codebook is
-    * grouped per subspace and sorted by code id driver-side
-    * (constant-bounded: nSub·nCode rows) so the linear scan reproduces
-    * the first-smallest-id tie-break.
+  /** A build's PQ codebook (sub, code, cw), persisted. `trained` =
+    * [[Similarity.pqTrainCodebook]]'s dequantized Lloyd output (per
+    * subspace) — over the residuals when `residual`, the absolute vectors
+    * otherwise; seeded = the nCode smallest-id corpus vectors sliced per
+    * subspace, the seed codewords [[Similarity.pqCodes]] assigns against.
+    * Returned as the in-memory table, so the encode collects no re-read.
     */
-  /** Encode a pre-assigned batch against a stored codebook, carrying the
-    * cell through: `src` is (vec_id, v, cell) — the assignment itself,
-    * whose `v` IS `normed(emb)`'s column — so the corpus is NOT re-read
-    * and re-normed for the encode, and no (vec_id → cell) re-attach join
-    * follows (it used to: encode over a fresh `normed(emb)` scan, then
-    * `.join(cellOf, "vec_id")` — one redundant full pass plus one
-    * batch-sized shuffle per PQ build/append). Output (vec_id, sub,
-    * code, cell), bit-identical to the old encode+join by construction.
+  private def pqCodebook(emb: DataFrame, path: String, a: DataFrame,
+                         cents: Cents, nSub: Int, nCode: Int,
+                         trained: Boolean, trainIters: Int,
+                         residual: Boolean): DataFrame = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    val codebook =
+      if (residual) Similarity.pqTrainCodebook(
+        residuals(a, cents).withColumnRenamed("v", "embedding"),
+        nSub, nCode, trainIters)
+      else if (trained) Similarity.pqTrainCodebook(emb, nSub, nCode, trainIters)
+      else {
+        val seeds: Array[(Long, Array[Double])] = Similarity.normed(emb)
+          .orderBy("vec_id").limit(nCode)
+          .select("vec_id", "v").collect()
+          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+        val sub = if (seeds.nonEmpty) seeds(0)._2.length / nSub else 0
+        (for {
+          m <- 0 until nSub
+          (cid, cv) <- seeds
+        } yield (m.toLong, cid, cv.slice(m * sub, (m + 1) * sub).toSeq))
+          .toDF("sub", "code", "cw")
+      }
+    codebook.write.mode("overwrite").parquet(codewordsPath(path))
+    codebook
+  }
+
+  /** PQ-encode a pre-assigned batch `src` (vec_id, v, cell) against an
+    * EXPLICIT codeword table (sub, code, cw) — [[Similarity.pqCodes]]'
+    * rounding and tie semantics exactly (9-dp-rounded subspace L2,
+    * smaller code id wins ties), so a seeded codebook codes exactly as
+    * the inline pqCodes does. The codebook is grouped per subspace and
+    * sorted by code id driver-side (constant-bounded: nSub·nCode rows) so
+    * the linear scan reproduces the first-smallest-id tie-break. The cell
+    * rides through: `src` is the assignment itself, so the corpus is not
+    * re-read for the encode and no (vec_id → cell) re-attach join
+    * follows. Output (vec_id, sub, code, cell).
     */
   private def encodeCells(spark: SparkSession, src: DataFrame,
                           codewords: DataFrame): DataFrame = {
@@ -573,30 +686,6 @@ object Index {
     // instead of a boxed Seq[Double] per row (graft.functions.PqKernels)
     val codes = org.apache.spark.sql.graft.GraftShim.column(
       graft.functions.PqEncode(
-        org.apache.spark.sql.graft.GraftShim.expression(col("v")), bc, nSub))
-    src
-      .select(col("vec_id"), posexplode(codes).as(Seq("sub", "code")), col("cell"))
-      .select(col("vec_id"), col("sub").cast("long").as("sub"), col("code"),
-        col("cell"))
-  }
-
-  /** The seeded-codebook twin of [[encodeCells]]: codebook m = subvector
-    * m of the `k` smallest-id vectors of the assignment (the
-    * [[Similarity.pqCodes]] convention — `src.v` is `normed(emb).v`, so
-    * the seeds are the same rows pqCodes would collect), assignment via
-    * the same 9-dp/ties kernel. Replaces `pqCodes(emb,...).join(cellOf)`
-    * in the seeded build — one corpus scan and the re-attach join gone.
-    */
-  private def pqSeedCodesWithCell(src: DataFrame, nSub: Int,
-                                  k: Int): DataFrame = {
-    val spark = src.sparkSession
-    val cents: Array[(Long, Array[Double])] = src
-      .orderBy("vec_id").limit(k)
-      .select("vec_id", "v").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val bc = spark.sparkContext.broadcast(cents)
-    val codes = org.apache.spark.sql.graft.GraftShim.column(
-      graft.functions.PqSeedCodes(
         org.apache.spark.sql.graft.GraftShim.expression(col("v")), bc, nSub))
     src
       .select(col("vec_id"), posexplode(codes).as(Seq("sub", "code")), col("cell"))
@@ -698,32 +787,8 @@ object Index {
                 superProbe: Int = Similarity.defaultSuperProbe,
                 metaCols: Seq[String] = Nil): Unit =
     Lease.withLease(spark, path, "appendIvf") {
-    val cents = Similarity.collectCentroids(
-      spark.read.parquet(centroidsDir(spark, path)))
-    val post = Similarity.withCellRanks(Similarity.normed(newEmb),
-      cents.length, 1,
-      twoLevelMin = appendTwoLevelMin(spark, path),
-      superProbe = superProbe, seedArr = cents)
-      .select(col("vec_id"), col("v"), col("norm"),
-        element_at(col("cells"), 1).as("cell"))
-    // the store's schema decides the metadata set — a caller-side
-    // mismatch fails loudly instead of writing silently-unfilterable rows
-    val live = liveDir(spark, path, PostingsKind)
-    val meta = appendMetaCols(spark, live, postingsCore, newEmb, metaCols)
-    val withMeta =
-      if (meta.isEmpty) post
-      else post.join(newEmb.select((Seq("vec_id") ++ meta).map(col): _*), "vec_id")
-    // stamped AFTER any tombstone the caller just wrote ([[upsertIvf]]):
-    // the appended rows outrank it and serve; older rows stay masked
-    val seqNo = Tombstones.nextSeq(spark, path)
-    fencedAppend(spark, path, PostingsKind) { dir =>
-      withMeta
-        .withColumn("ins_seq", lit(seqNo))
-        .repartition(col("cell")) // one appended file per touched cell
-        .write.mode("append").partitionBy("cell")
-        .parquet(dir)
+      appendStore(spark, path, newEmb, superProbe, metaCols)((_, _) => Seq(Raw))
     }
-  }
 
   /** Refresh a stored IVF-PQ index without a rebuild — the compressed
     * twin of [[appendIvf]], and the one that matters at corpus scale
@@ -731,74 +796,26 @@ object Index {
     * The arriving batch is coarse-assigned against the FROZEN stored
     * centroids and PQ-encoded against the FROZEN stored codebook
     * ([[Similarity.pqCodes]] rounding and tie-break semantics exactly:
-    * 9-dp-rounded subspace L2, smaller code id wins ties), then appended
-    * to its `pq_codes` cell partitions. Both quantizers stay frozen for
-    * the same reason the IVF one does: code/cell ids remain stable so
-    * existing rows never move; codebook drift, like centroid drift, is a
-    * rebuild decision informed by [[Similarity.snapshotDrift]].
+    * 9-dp-rounded subspace L2, smaller code id wins ties) — as residuals
+    * against its assigned centroid on a residual store, exactly like the
+    * build — then appended to its `pq_codes` cell partitions (and the raw
+    * flavor, [[rawInStep]]). Both quantizers stay frozen for the same
+    * reason the IVF one does: code/cell ids remain stable so existing
+    * rows never move; codebook drift, like centroid drift, is a rebuild
+    * decision informed by [[Similarity.snapshotDrift]].
     */
   def appendIvfPq(spark: SparkSession, path: String, newEmb: DataFrame,
                   superProbe: Int = Similarity.defaultSuperProbe,
                   metaCols: Seq[String] = Nil): Unit =
     Lease.withLease(spark, path, "appendIvfPq") {
-    val centsDf = spark.read.parquet(centroidsDir(spark, path))
-    val cents = Similarity.collectCentroids(centsDf)
-    val assignment = Similarity.withCellRanks(Similarity.normed(newEmb),
-      cents.length, 1,
-      twoLevelMin = appendTwoLevelMin(spark, path),
-      superProbe = superProbe, seedArr = cents)
-      .select(col("vec_id"), col("v"), col("norm"),
-        element_at(col("cells"), 1).as("cell"))
-    // residual store: the batch is encoded as residuals against its
-    // assigned FROZEN centroid, exactly like the build. Either way the
-    // encode input is the ASSIGNMENT's rows (v already normed, cell
-    // already attached) — no batch re-scan, no re-attach join.
-    val encodeInput =
-      if (isResidual(spark, path)) assignment
-        .join(broadcast(centsDf.select(col("cid").as("cell"), col("cv"))), "cell")
-        .select(col("vec_id"),
-          VecQuant.sub(col("v"), col("cv")).as("v"),
-          col("cell"))
-      else assignment
-    val codesDf = encodeCells(spark, encodeInput,
-      spark.read.parquet(codewordsDir(spark, path)))
-    // the store's schema decides the metadata set — a caller-side
-    // mismatch fails loudly instead of writing silently-unfilterable rows
-    val live = liveDir(spark, path, PqCodesKind)
-    val meta = appendMetaCols(spark, live, pqCodesCore, newEmb, metaCols)
-    val withMeta =
-      if (meta.isEmpty) codesDf
-      else codesDf.join(newEmb.select((Seq("vec_id") ++ meta).map(col): _*), "vec_id")
-    // one seq for the batch, shared by both flavors (same mutation)
-    val seqNo = Tombstones.nextSeq(spark, path)
-    fencedAppend(spark, path, PqCodesKind) { dir =>
-      withMeta
-        .withColumn("ins_seq", lit(seqNo))
-        .repartition(col("cell")) // one appended file per touched cell
-        .write.mode("append").partitionBy("cell")
-        .parquet(dir)
-    }
-    // a COMBINED store (saveIvfPq withRaw / saveIvf sharing the path)
-    // keeps its refine flavor in step: the same frozen-quantizer
-    // assignment appends the raw vectors too, so a rerank serve can
-    // refine appended candidates instead of silently dropping them at
-    // the refine join
-    if (generations(spark, path, PostingsKind).nonEmpty) {
-      val live = liveDir(spark, path, PostingsKind)
-      val rawMeta = appendMetaCols(spark, live, postingsCore, newEmb, metaCols)
-      val rawWithMeta =
-        if (rawMeta.isEmpty) assignment
-        else assignment.join(
-          newEmb.select((Seq("vec_id") ++ rawMeta).map(col): _*), "vec_id")
-      fencedAppend(spark, path, PostingsKind) { dir =>
-        rawWithMeta
-          .withColumn("ins_seq", lit(seqNo))
-          .repartition(col("cell"))
-          .write.mode("append").partitionBy("cell")
-          .parquet(dir)
+      appendStore(spark, path, newEmb, superProbe, metaCols) { (dir, geo) =>
+        // the PQ marker owns the geometry whenever it exists; a store
+        // without one predates residual coding (absolute)
+        Pq(spark.read.parquet(codewordsDir(spark, path)),
+          residual = dir == metaPath(path) && geo.residual) +:
+          rawInStep(spark, path)
       }
     }
-  }
 
   /** Tombstone a batch of vector ids — O(batch), no partition rewrite.
     * Masked everywhere from the next serve's plan on: the ADC scan, the
@@ -825,10 +842,7 @@ object Index {
     */
   def deleteWhere(spark: SparkSession, path: String, pred: Column): Unit =
     Lease.withLease(spark, path, "deleteWhere") {
-    def has(kind: String) = generations(spark, path, kind)
-      .exists { case (_, p) => isCommitted(spark, p) }
-    val kind = Seq(PostingsKind, PqCodesKind, SqCodesKind)
-      .find(has).getOrElse(PostingsKind)
+    val kind = primaryKind(spark, path).getOrElse(PostingsKind)
     val ids = Tombstones.mask(
       spark.read.parquet(liveDir(spark, path, kind)),
       Tombstones.readAll(spark, path), "vec_id")
@@ -839,35 +853,44 @@ object Index {
   /** Replace vectors in place: tombstone the batch's ids (mutation seq
     * s), then append the new versions (seq s+1) — the delete-then-add
     * ordering. Serves see exactly the new version: old rows are masked
-    * by the tombstone, new rows outrank it.
+    * by the tombstone, new rows outrank it. Every upsert* is this, over
+    * its flavor's append (combined stores keep the raw flavor in step
+    * through the append).
     */
+  private def upsert(spark: SparkSession, path: String, batch: DataFrame,
+                     op: String)(append: => Unit): Unit =
+    Lease.withLease(spark, path, op) {
+      delete(spark, path, batch.select("vec_id"))
+      append
+    }
+
+  /** [[upsert]] over [[appendIvf]]. */
   def upsertIvf(spark: SparkSession, path: String, batch: DataFrame,
                 superProbe: Int = Similarity.defaultSuperProbe,
                 metaCols: Seq[String] = Nil): Unit =
-    Lease.withLease(spark, path, "upsertIvf") {
-    delete(spark, path, batch.select("vec_id"))
-    appendIvf(spark, path, batch, superProbe, metaCols)
-  }
+    upsert(spark, path, batch, "upsertIvf")(
+      appendIvf(spark, path, batch, superProbe, metaCols))
 
-  /** The compressed twin of [[upsertIvf]] (combined stores keep the raw
-    * flavor in step through [[appendIvfPq]]).
-    */
+  /** [[upsert]] over [[appendIvfPq]]. */
   def upsertIvfPq(spark: SparkSession, path: String, batch: DataFrame,
                   superProbe: Int = Similarity.defaultSuperProbe,
                   metaCols: Seq[String] = Nil): Unit =
-    Lease.withLease(spark, path, "upsertIvfPq") {
-    delete(spark, path, batch.select("vec_id"))
-    appendIvfPq(spark, path, batch, superProbe, metaCols)
-  }
+    upsert(spark, path, batch, "upsertIvfPq")(
+      appendIvfPq(spark, path, batch, superProbe, metaCols))
 
-  /** The scalar-quantized twin of [[upsertIvf]]. */
+  /** [[upsert]] over [[appendIvfSq]]. */
   def upsertIvfSq(spark: SparkSession, path: String, batch: DataFrame,
                   superProbe: Int = Similarity.defaultSuperProbe,
                   metaCols: Seq[String] = Nil): Unit =
-    Lease.withLease(spark, path, "upsertIvfSq") {
-    delete(spark, path, batch.select("vec_id"))
-    appendIvfSq(spark, path, batch, superProbe, metaCols)
-  }
+    upsert(spark, path, batch, "upsertIvfSq")(
+      appendIvfSq(spark, path, batch, superProbe, metaCols))
+
+  /** [[upsert]] over [[appendIvfMrl]] — both MRL flavors. */
+  def upsertIvfMrl(spark: SparkSession, path: String, batch: DataFrame,
+                   superProbe: Int = Similarity.defaultSuperProbe,
+                   metaCols: Seq[String] = Nil): Unit =
+    upsert(spark, path, batch, "upsertIvfMrl")(
+      appendIvfMrl(spark, path, batch, superProbe, metaCols))
 
   /** The deletion-mass hook — [[stats]]' tombstone twin, the compaction
     * trigger deletes add: every masked row is anti-join work each serve
@@ -881,10 +904,7 @@ object Index {
     */
   def deleteStats(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    def has(kind: String) = generations(spark, path, kind)
-      .exists { case (_, p) => isCommitted(spark, p) }
-    val kind = Seq(PostingsKind, PqCodesKind, SqCodesKind)
-      .find(has).getOrElse(PostingsKind)
+    val kind = primaryKind(spark, path).getOrElse(PostingsKind)
     // version-level view: one (vec_id, ins_seq) per stored version (the
     // PQ flavor repeats it nSub times)
     val vecs = spark.read.parquet(liveDir(spark, path, kind))
@@ -920,14 +940,13 @@ object Index {
         round(col("n_masked").cast("double") / col("n_versions_stored"), 4))
   }
 
-  private def sqCodesPath(path: String) = s"$path/$SqCodesKind"
   private def sqMetaPath(path: String) = s"$path/sq_meta"
 
   /** Whether the store's SQ codes are residual-coded ([[saveIvfSq]]
     * `residual`); stores written before the marker are absolute.
     */
   private def isSqResidual(spark: SparkSession, path: String): Boolean =
-    buildMetaOf(readMetaRow(spark, sqMetaPath(path))).residual
+    readBuildMeta(spark, sqMetaPath(path)).residual
 
   /** Exact integer dot of two packed code vectors, widened to double at
     * the end — |q| ≤ 127 keeps every product and the sum exact in Long,
@@ -937,62 +956,6 @@ object Index {
     */
   private def sqDot(a: Column, b: Column): Column = VecQuant.byteDot(a, b)
 
-  /** Per-vector symmetric int8 quantization — [[Similarity.int8TopK]]'s
-    * exact convention (scale = max|x|, q = floor(x·127/scale + 0.5),
-    * r = round(scale/norm, 9), zero-vector conventions pinned), packed
-    * to one byte per dimension. Per-VECTOR scales mean the SQ store has
-    * no frozen corpus-level quantizer at all: appends quantize
-    * themselves, and only the coarse centroids freeze.
-    */
-  private def sqRows(emb: DataFrame): DataFrame =
-    Similarity.normed(emb)
-      .withColumn("scale", VecQuant.maxAbs(col("v")))
-      .withColumn("safe_scale",
-        when(col("scale") === 0d, lit(1.0)).otherwise(col("scale")))
-      .select(col("vec_id"),
-        VecQuant.sqPack(col("v"), col("safe_scale")).as("qb"),
-        round(when(col("norm") === 0d, lit(0.0))
-          .otherwise(col("scale") / col("norm")), 9).as("r"))
-
-  /** [[sqRows]] derived from an assignment that already carries
-    * (v, norm, cell) — exactly
-    * `assignment.select("vec_id","cell").join(sqRows(emb), "vec_id")`
-    * without re-scanning and re-norming the corpus and without the
-    * re-attach join (the assignment's v/norm ARE `normed(emb)`'s
-    * columns, one row per vec_id on both sides).
-    */
-  private def sqRowsFromAssignment(assignment: DataFrame): DataFrame =
-    assignment
-      .withColumn("scale", VecQuant.maxAbs(col("v")))
-      .withColumn("safe_scale",
-        when(col("scale") === 0d, lit(1.0)).otherwise(col("scale")))
-      .select(col("vec_id"), col("cell"),
-        VecQuant.sqPack(col("v"), col("safe_scale")).as("qb"),
-        round(when(col("norm") === 0d, lit(0.0))
-          .otherwise(col("scale") / col("norm")), 9).as("r"))
-
-  /** RESIDUAL SQ rows: quantize x − c[cell] per vector (FAISS's
-    * by_residual for the scalar quantizer). The int8 step shrinks from
-    * max|x|/127 (corpus scale) to max|resid|/127 (CELL scale) — on any
-    * clustered corpus an order of magnitude finer for the same byte —
-    * and unlike residual PQ it needs NO trained codebook: per-vector
-    * scales quantize whatever the residual distribution is. Stored
-    * `r` is the residual scale (reconstruction x̂ = c + qb·r/127);
-    * contrast the absolute rows, whose `r` is the rescale factor of a
-    * rank-only integer-dot score.
-    */
-  private def sqResidualRows(assignment: DataFrame,
-                             cents: DataFrame): DataFrame =
-    assignment
-      .join(broadcast(cents.select(col("cid").as("cell"), col("cv"))), "cell")
-      .withColumn("resid", VecQuant.sub(col("v"), col("cv")))
-      .withColumn("scale", VecQuant.maxAbs(col("resid")))
-      .withColumn("safe_scale",
-        when(col("scale") === 0d, lit(1.0)).otherwise(col("scale")))
-      .select(col("vec_id"), col("cell"),
-        VecQuant.sqPack(col("resid"), col("safe_scale")).as("qb"),
-        col("scale").as("r"))
-
   /** Build + persist the SCALAR-QUANTIZED IVF store (cf. FAISS
     * IndexIVFScalarQuantizer, QT_8bit-style): cell-partitioned int8
     * code vectors — 1 byte/dim + an 8-byte rescale factor ≈ 8× smaller
@@ -1000,7 +963,11 @@ object Index {
     * `ann_int8_recall` eval prices the quantization loss; contrast the
     * PQ store's 8-codes-per-vector compression and its ADC error).
     * The serving middle tier: PQ when bytes dominate, SQ when recall
-    * does, raw when the refine needs exact cosines.
+    * does, raw when the refine needs exact cosines. `residual` codes
+    * x − c[cell] per vector (FAISS's by_residual for the scalar
+    * quantizer — [[encode]]); `withRaw` adds the refine flavor for
+    * [[ivfSqRerankTopKIndexed]] under the saveIvfPq contract (same
+    * assignment, written after the codes).
     */
   def saveIvfSq(emb: DataFrame, path: String, nCells: Int = 16,
                 forceFlat: Boolean = false,
@@ -1012,164 +979,49 @@ object Index {
                 residual: Boolean = false,
                 insSeq: Long = 0L): Unit =
     Lease.withLease(emb.sparkSession, path, "saveIvfSq") {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    retireQuantizerGenerations(spark, path)
-    val cells = Similarity.autoCells(emb.count(), nCells)
-    val cents =
-      if (trained) Similarity.kmeansCentroids(emb, cells, trainIters)
-      else Similarity.normed(emb)
-        .orderBy("vec_id").limit(cells)
-        .select(col("vec_id").as("cid"), col("v").as("cv"), col("norm").as("cn"))
-    cents.write.mode("overwrite").parquet(centroidsPath(path))
+    import emb.sparkSession.implicits._
     // the store self-describes its coding (a residual store served with
     // the absolute integer-dot ranking would be silently garbage) and
     // its centroid training, so [[rebuild]] preserves both
     Seq((residual, trained, trainIters, forceFlat))
       .toDF("residual", "trained", "train_iters", "flat")
       .write.mode("overwrite").parquet(sqMetaPath(path))
-    val assignment =
-      if (trained) assignedTo(emb, path, forceFlat, superProbe)
-      else assigned(emb, cells, forceFlat, superProbe)
-    val rows =
-      if (residual)
-        sqResidualRows(assignment, spark.read.parquet(centroidsDir(spark, path)))
-      else sqRowsFromAssignment(assignment)
-    val withMeta =
-      if (metaCols.isEmpty) rows
-      else rows.join(emb.select((Seq("vec_id") ++ metaCols).map(col): _*), "vec_id")
-    retireGenerations(spark, path, SqCodesKind) // in-place rebuild
-    if (insSeq == 0L) // fresh build: no mutation history (a rebuild keeps it)
-      Tombstones.clear(spark, path)
-    withMeta
-      .withColumn("ins_seq", lit(insSeq))
-      .repartition(col("cell")) // one file per cell (see saveIvf)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(sqCodesPath(path))
-    if (withRaw) {
-      // the refine flavor for [[ivfSqRerankTopKIndexed]] — same
-      // assignment, raw vectors, same cell grid (the saveIvfPq withRaw
-      // contract: written after the codes, crash leaves codes-only)
-      val rawMeta =
-        if (metaCols.isEmpty) assignment
-        else assignment.join(
-          emb.select((Seq("vec_id") ++ metaCols).map(col): _*), "vec_id")
-      retireGenerations(spark, path, PostingsKind)
-      rawMeta
-        .withColumn("ins_seq", lit(insSeq))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(postingsPath(path))
-    }
+    buildStore(emb, path, nCells, trained, trainIters, forceFlat, superProbe,
+      metaCols, insSeq)((_, _) => Sq(residual) +: (if (withRaw) Seq(Raw) else Nil))
   }
 
   /** Refresh the SQ store without a rebuild: coarse-assign the batch
     * against the FROZEN stored centroids and quantize per-vector (the
     * SQ tier's refresh is the simplest of the three — there is no
-    * corpus-level quantizer to freeze).
+    * corpus-level quantizer to freeze); a residual store codes the
+    * batch's residuals against its assigned frozen centroid, and a
+    * combined SQ+raw store keeps its refine flavor in step.
     */
   def appendIvfSq(spark: SparkSession, path: String, newEmb: DataFrame,
                   superProbe: Int = Similarity.defaultSuperProbe,
                   metaCols: Seq[String] = Nil): Unit =
     Lease.withLease(spark, path, "appendIvfSq") {
-    val cents = spark.read.parquet(centroidsDir(spark, path))
-    val centArr = Similarity.collectCentroids(cents)
-    val assignment = Similarity.withCellRanks(Similarity.normed(newEmb),
-      centArr.length, 1,
-      twoLevelMin = appendTwoLevelMin(spark, path),
-      superProbe = superProbe, seedArr = centArr)
-      .select(col("vec_id"), col("v"), col("norm"),
-        element_at(col("cells"), 1).as("cell"))
-    // a residual store encodes the batch's residuals against its
-    // assigned FROZEN centroid, exactly like the build
-    val rows =
-      if (isSqResidual(spark, path)) sqResidualRows(assignment, cents)
-      else sqRowsFromAssignment(assignment)
-    val live = liveDir(spark, path, SqCodesKind)
-    val meta = appendMetaCols(spark, live, sqCodesCore, newEmb, metaCols)
-    val withMeta =
-      if (meta.isEmpty) rows
-      else rows.join(newEmb.select((Seq("vec_id") ++ meta).map(col): _*), "vec_id")
-    val seqNo = Tombstones.nextSeq(spark, path)
-    fencedAppend(spark, path, SqCodesKind) { dir =>
-      withMeta
-        .withColumn("ins_seq", lit(seqNo))
-        .repartition(col("cell"))
-        .write.mode("append").partitionBy("cell")
-        .parquet(dir)
-    }
-    // a combined SQ+raw store keeps its refine flavor in step (the
-    // appendIvfPq contract)
-    if (generations(spark, path, PostingsKind).nonEmpty) {
-      val liveRaw = liveDir(spark, path, PostingsKind)
-      val rawMeta = appendMetaCols(spark, liveRaw, postingsCore, newEmb, metaCols)
-      val rawWithMeta =
-        if (rawMeta.isEmpty) assignment
-        else assignment.join(
-          newEmb.select((Seq("vec_id") ++ rawMeta).map(col): _*), "vec_id")
-      fencedAppend(spark, path, PostingsKind) { dir =>
-        rawWithMeta
-          .withColumn("ins_seq", lit(seqNo))
-          .repartition(col("cell"))
-          .write.mode("append").partitionBy("cell")
-          .parquet(dir)
+      appendStore(spark, path, newEmb, superProbe, metaCols) { (dir, geo) =>
+        Sq(if (dir == sqMetaPath(path)) geo.residual
+           else isSqResidual(spark, path)) +: rawInStep(spark, path)
       }
     }
-  }
 
-  private def mrlCodesPath(path: String) = s"$path/$MrlCodesKind"
   private def mrlMetaPath(path: String) = s"$path/mrl_meta"
-
-  // The raw (unquantized) MRL prefix rows — vec_id, first-`dims` slice,
-  // prefix norm, exactly the truncation Similarity.matryoshkaRecall
-  // evaluates — are derived inline at each store site from rows that
-  // already carry `v` (the assignment or the just-written postings), so
-  // the corpus is never re-scanned for the slice.
-
-  /** The QUANTIZED prefix rows — the MRL × SQ8 combined tier: the
-    * first-`dims` slice int8-quantized per vector with [[sqRows]]'
-    * exact conventions (scale = max|x| over the PREFIX, q = floor(x·127
-    * / scale + 0.5) packed to bytes, r = round(scale / prefixNorm, 9),
-    * zero-vector conventions pinned). One byte per kept dimension
-    * instead of eight: the shortlist scan reads dims/(8·fullDims) of
-    * the raw postings bytes (~2% at 16-of-64) — the two compression
-    * axes (dimension cut × precision cut) compose, and the full-width
-    * exact refine is unchanged. Scoring follows the absolute-SQ
-    * convention: exact integer code dot times the stored rescale
-    * factor — a rank-only shortlist surrogate, which is all a
-    * rerank-refined serve needs.
-    */
-  private def mrlSqRows(emb: DataFrame, dims: Int): DataFrame =
-    emb.select(col("vec_id"),
-      slice(col("embedding").cast("array<double>"), 1, dims).as("pv"))
-      .withColumn("pn", sqrt(VecFold.dot(col("pv"), col("pv"))))
-      .withColumn("scale", VecQuant.maxAbs(col("pv")))
-      .withColumn("safe_scale",
-        when(col("scale") === 0d, lit(1.0)).otherwise(col("scale")))
-      .select(col("vec_id"),
-        VecQuant.sqPack(col("pv"), col("safe_scale")).as("qb"),
-        round(when(col("pn") === 0d, lit(0.0))
-          .otherwise(col("scale") / col("pn")), 9).as("r"))
 
   /** The MRL store's recorded build shape: prefix width + whether the
     * prefix flavor is int8-quantized. One marker read ([[readMetaRow]]).
     * Stores written before the `quantized` column are raw-prefix.
     */
-  private case class MrlMeta(dims: Int, quantized: Boolean)
-
-  private def mrlMeta(spark: SparkSession, path: String): MrlMeta =
+  private def mrlMeta(spark: SparkSession, path: String): Mrl =
     readMetaRow(spark, mrlMetaPath(path)) match {
       case None => throw new IllegalArgumentException(
         s"no MRL marker at ${mrlMetaPath(path)} — not an MRL store")
       case Some((cols, row)) =>
-        MrlMeta(row.getInt(row.fieldIndex("prefix_dims")),
+        Mrl(row.getInt(row.fieldIndex("prefix_dims")),
           cols.contains("quantized") &&
             row.getBoolean(row.fieldIndex("quantized")))
     }
-
-  /** The prefix flavor's non-metadata columns depend on the coding. */
-  private def mrlCoreOf(quantized: Boolean): Set[String] =
-    if (quantized) sqCodesCore else mrlCodesCore
 
   /** Build + persist the MATRYOSHKA serving tier: a cell-partitioned
     * PREFIX-DIMENSION flavor (`mrl_codes/`: vec_id, first-`prefixDims`
@@ -1184,13 +1036,12 @@ object Index {
     * shared with every other flavor), so probe semantics are identical
     * to the raw store's. Implemented as [[saveIvf]] (centroids +
     * ivf_meta + raw postings, same build knobs) plus the prefix flavor
-    * derived from the just-written assignment — one extra
+    * derived from the just-written postings ([[buildStore]]) — one extra
     * cell-partitioned write, no second assignment pass.
-    */
-  /** `quantized = true` builds the MRL × SQ8 COMBINED tier: the prefix
-    * slice is additionally int8-quantized ([[mrlSqRows]]) — 1 byte per
-    * kept dimension, so the shortlist reads ~dims/(8·fullDims) of the
-    * raw bytes (~2% at 16-of-64 vs the raw prefix's 25%) and the
+    *
+    * `quantized = true` builds the MRL × SQ8 COMBINED tier ([[mrlRows]]):
+    * 1 byte per kept dimension, so the shortlist reads ~dims/(8·fullDims)
+    * of the raw bytes (~2% at 16-of-64 vs the raw prefix's 25%) and the
     * full-width refine is unchanged. The coding is recorded in
     * `mrl_meta` and every serve/append/rebuild dispatches from disk.
     */
@@ -1205,50 +1056,18 @@ object Index {
                  insSeq: Long = 0L): Unit =
     Lease.withLease(emb.sparkSession, path, "saveIvfMrl") {
     require(prefixDims > 0, "prefixDims must be positive")
-    val spark = emb.sparkSession
-    import spark.implicits._
-    saveIvf(emb, path, nCells, forceFlat, superProbe, metaCols, trained,
-      trainIters, insSeq)
+    import emb.sparkSession.implicits._
+    Seq((trained, trainIters, forceFlat))
+      .toDF("trained", "train_iters", "flat")
+      .write.mode("overwrite").parquet(ivfMetaPath(path))
     // the store self-describes its prefix width AND coding: serves and
     // appends must slice exactly as the build did (a mismatched
     // query-side slice would rank prefixes of different lengths; a
     // quantized store scored as raw doubles would read garbage)
     Seq((prefixDims, quantized)).toDF("prefix_dims", "quantized")
       .write.mode("overwrite").parquet(mrlMetaPath(path))
-    // the prefix flavor derives ENTIRELY from the just-written postings:
-    // they carry (vec_id, v, cell, metaCols), so one pruned re-read
-    // yields cell, the prefix slice AND the metadata — no second
-    // assignment pass, no corpus re-scan for the slice, no re-attach
-    // joins (the previous shape joined a cellOf read against an
-    // emb-derived prefix table and then the metaCols). slice(v) here ==
-    // slice(embedding cast to array<double>) in mrl{Sq}Rows, bit-exact.
-    val post = spark.read.parquet(liveDir(spark, path, PostingsKind))
-    val vp = slice(col("v"), 1, prefixDims)
-    val withMeta =
-      if (quantized)
-        post
-          .withColumn("pv", vp)
-          .withColumn("pn", sqrt(VecFold.dot(col("pv"), col("pv"))))
-          .withColumn("scale", VecQuant.maxAbs(col("pv")))
-          .withColumn("safe_scale",
-            when(col("scale") === 0d, lit(1.0)).otherwise(col("scale")))
-          .select(Seq(col("vec_id"), col("cell"),
-            VecQuant.sqPack(col("pv"), col("safe_scale")).as("qb"),
-            round(when(col("pn") === 0d, lit(0.0))
-              .otherwise(col("scale") / col("pn")), 9).as("r")) ++
-            metaCols.map(col): _*)
-      else
-        post
-          .withColumn("vp", vp)
-          .select(Seq(col("vec_id"), col("cell"), col("vp"),
-            sqrt(VecFold.dot(col("vp"), col("vp"))).as("vpn")) ++
-            metaCols.map(col): _*)
-    retireGenerations(spark, path, MrlCodesKind) // in-place rebuild
-    withMeta
-      .withColumn("ins_seq", lit(insSeq))
-      .repartition(col("cell")) // one file per cell (see saveIvf)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(mrlCodesPath(path))
+    buildStore(emb, path, nCells, trained, trainIters, forceFlat, superProbe,
+      metaCols, insSeq)((_, _) => Seq(Raw, Mrl(prefixDims, quantized)))
   }
 
   /** Refresh the MRL store without a rebuild: the batch is assigned
@@ -1256,90 +1075,24 @@ object Index {
     * prefix width — like the SQ tier there is no corpus-level quantizer
     * to freeze, only the centroids and the recorded width. Both
     * flavors (prefix codes + raw refine) append under one mutation seq.
+    *
+    * The RAW refine flavor appends FIRST: the two flavors land in two
+    * writes, and a crash (or fence abort) between them must leave the
+    * benign asymmetry — an id present in postings but missing from
+    * mrl_codes is merely never SHORTLISTED (and still serves through
+    * every raw-flavor path), whereas the reverse order leaves prefix
+    * rows whose refine join silently drops them from every MRL result
+    * (recall loss with no error). Recovery after a crash between the
+    * writes: re-run the append — or compare the two flavors' vec_id sets
+    * at this seq and re-append the difference.
     */
   def appendIvfMrl(spark: SparkSession, path: String, newEmb: DataFrame,
                    superProbe: Int = Similarity.defaultSuperProbe,
                    metaCols: Seq[String] = Nil): Unit =
     Lease.withLease(spark, path, "appendIvfMrl") {
-    val cents = Similarity.collectCentroids(
-      spark.read.parquet(centroidsDir(spark, path)))
-    val assignment = Similarity.withCellRanks(Similarity.normed(newEmb),
-      cents.length, 1,
-      twoLevelMin = appendTwoLevelMin(spark, path),
-      superProbe = superProbe, seedArr = cents)
-      .select(col("vec_id"), col("v"), col("norm"),
-        element_at(col("cells"), 1).as("cell"))
-    val mm = mrlMeta(spark, path)
-    // prefix rows from the assignment itself (its v IS normed(newEmb)'s
-    // column, so slice(v) == mrl{Sq}Rows' slice of the embedding cast):
-    // no batch re-scan, no re-attach join
-    val vp = slice(col("v"), 1, mm.dims)
-    val rows =
-      if (mm.quantized)
-        assignment
-          .withColumn("pv", vp)
-          .withColumn("pn", sqrt(VecFold.dot(col("pv"), col("pv"))))
-          .withColumn("scale", VecQuant.maxAbs(col("pv")))
-          .withColumn("safe_scale",
-            when(col("scale") === 0d, lit(1.0)).otherwise(col("scale")))
-          .select(col("vec_id"), col("cell"),
-            VecQuant.sqPack(col("pv"), col("safe_scale")).as("qb"),
-            round(when(col("pn") === 0d, lit(0.0))
-              .otherwise(col("scale") / col("pn")), 9).as("r"))
-      else
-        assignment
-          .withColumn("vp", vp)
-          .select(col("vec_id"), col("cell"), col("vp"),
-            sqrt(VecFold.dot(col("vp"), col("vp"))).as("vpn"))
-    val live = liveDir(spark, path, MrlCodesKind)
-    val meta = appendMetaCols(spark, live, mrlCoreOf(mm.quantized),
-      newEmb, metaCols)
-    val withMeta =
-      if (meta.isEmpty) rows
-      else rows.join(newEmb.select((Seq("vec_id") ++ meta).map(col): _*),
-        "vec_id")
-    val seqNo = Tombstones.nextSeq(spark, path)
-    // the RAW refine flavor appends FIRST: the two flavors share one
-    // seq but land in two writes, and a crash (or fence abort) between
-    // them must leave the benign asymmetry — an id present in postings
-    // but missing from mrl_codes is merely never SHORTLISTED (and still
-    // serves through every raw-flavor path), whereas the reverse order
-    // leaves prefix rows whose refine join silently drops them from
-    // every MRL result (recall loss with no error). Recovery after a
-    // crash between the writes: re-run the append — or compare the two
-    // flavors' vec_id sets at this seq and re-append the difference.
-    val liveRaw = liveDir(spark, path, PostingsKind)
-    val rawMeta = appendMetaCols(spark, liveRaw, postingsCore, newEmb, metaCols)
-    val rawWithMeta =
-      if (rawMeta.isEmpty) assignment
-      else assignment.join(
-        newEmb.select((Seq("vec_id") ++ rawMeta).map(col): _*), "vec_id")
-    fencedAppend(spark, path, PostingsKind) { dir =>
-      rawWithMeta
-        .withColumn("ins_seq", lit(seqNo))
-        .repartition(col("cell"))
-        .write.mode("append").partitionBy("cell")
-        .parquet(dir)
+      appendStore(spark, path, newEmb, superProbe, metaCols)((_, _) =>
+        Seq(Raw, mrlMeta(spark, path)))
     }
-    fencedAppend(spark, path, MrlCodesKind) { dir =>
-      withMeta
-        .withColumn("ins_seq", lit(seqNo))
-        .repartition(col("cell"))
-        .write.mode("append").partitionBy("cell")
-        .parquet(dir)
-    }
-  }
-
-  /** The matryoshka upsert — [[upsertIvf]]'s delete-then-add ordering
-    * over both MRL flavors.
-    */
-  def upsertIvfMrl(spark: SparkSession, path: String, batch: DataFrame,
-                   superProbe: Int = Similarity.defaultSuperProbe,
-                   metaCols: Seq[String] = Nil): Unit =
-    Lease.withLease(spark, path, "upsertIvfMrl") {
-    delete(spark, path, batch.select("vec_id"))
-    appendIvfMrl(spark, path, batch, superProbe, metaCols)
-  }
 
   /** The MATRYOSHKA serve: prefix-cosine shortlist from the stored
     * `mrl_codes/` (probed-cell partitions only — the scan reads
@@ -1369,8 +1122,11 @@ object Index {
     // which is all a shortlist that feeds an exact refine needs
     val scored =
       if (mm.quantized) {
-        val qp = mrlSqRows(queries, mm.dims)
-          .select(col("vec_id").as("query_id"), col("qb").as("qqb"))
+        // the query prefix is coded like the stored one ([[mrlRows]])
+        val qp = withScale(queries.select(col("vec_id"),
+            slice(col("embedding").cast("array<double>"), 1, mm.dims)
+              .as("pv")), "pv")
+          .select(col("vec_id").as("query_id"), sqBytes("pv").as("qqb"))
         codes.join(broadcast(probes), Seq("cell"))
           .where(col("vec_id") =!= col("query_id"))
           .join(broadcast(qp), "query_id")
@@ -1435,8 +1191,8 @@ object Index {
             sqrt(VecFold.dot(col("xh"), col("xh"))), col("qnorm")), 6)
             .as("cosine"))
     } else {
-      val qq = sqRows(queries)
-        .select(col("vec_id").as("query_id"), col("qb").as("qqb"))
+      val qq = withScale(Similarity.normed(queries), "v")
+        .select(col("vec_id").as("query_id"), sqBytes("v").as("qqb"))
       codes.join(broadcast(probes), Seq("cell"))
         .where(col("vec_id") =!= col("query_id"))
         .join(broadcast(qq), "query_id")
@@ -1713,23 +1469,14 @@ object Index {
     import spark.implicits._
     // flavor-aware like compact: a PQ-only store (saveIvfPq writes no
     // postings/) counts distinct vec_id over its codes instead
-    def has(kind: String) = generations(spark, path, kind)
-      .exists { case (_, p) => isCommitted(spark, p) }
+    val kind = primaryKind(spark, path).getOrElse(SqCodesKind)
     // the SERVED corpus: tombstoned rows are invisible to every serve
     // (their dead mass is [[deleteStats]]' column, not this one's)
-    val tomb = Tombstones.readAll(spark, path)
+    val served = Tombstones.mask(spark.read.parquet(liveDir(spark, path, kind)),
+      Tombstones.readAll(spark, path), "vec_id")
     val n =
-      if (has(PostingsKind))
-        Tombstones.mask(
-          spark.read.parquet(liveDir(spark, path, PostingsKind)),
-          tomb, "vec_id").count()
-      else {
-        val kind = if (has(PqCodesKind)) PqCodesKind else SqCodesKind
-        Tombstones.mask(
-          spark.read.parquet(liveDir(spark, path, kind)),
-          tomb, "vec_id")
-          .select("vec_id").distinct().count()
-      }
+      if (kind == PostingsKind) served.count()
+      else served.select("vec_id").distinct().count()
     val nc = spark.read.parquet(centroidsDir(spark, path)).count()
     val auto = Similarity.autoCells(n, floorCells).toLong
     Seq((n, nc, auto)).toDF("n_vectors", "n_cells", "auto_cells")
@@ -1800,9 +1547,7 @@ object Index {
     Lease.withLease(spark, path, "rebuild") {
     import Ckpt.CutOps
     val snap = snapshotStore(spark, path)
-    def has(kind: String) = generations(spark, path, kind)
-      .exists { case (_, p) => isCommitted(spark, p) }
-    require(has(PostingsKind),
+    require(hasLive(spark, path, PostingsKind),
       s"self-rebuild needs the raw-vector flavor at $path — a codes-only " +
         "store must be rebuilt from the source corpus via rebuildFrom " +
         "(the reader-safe, coding-preserving re-grid; a bare save* " +
@@ -1862,12 +1607,10 @@ object Index {
     Lease.withLease(spark, path, "rebuildFrom") {
     import Ckpt.CutOps
     val snap = snapshotStore(spark, path)
-    def has(kind: String) = generations(spark, path, kind)
-      .exists { case (_, p) => isCommitted(spark, p) }
-    val kinds = Seq(PostingsKind -> postingsCore, PqCodesKind -> pqCodesCore,
-      SqCodesKind -> sqCodesCore)
-    val (kind, core) = kinds.find { case (k, _) => has(k) }.getOrElse(
+    val kind = primaryKind(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no committed store at $path"))
+    val core = Map(PostingsKind -> postingsCore, PqCodesKind -> pqCodesCore,
+      SqCodesKind -> sqCodesCore)(kind)
     val meta = storedMetaCols(spark, liveDir(spark, path, kind), core)
     val missing = meta.filterNot(corpus.columns.contains)
     require(missing.isEmpty,
@@ -1899,27 +1642,36 @@ object Index {
           "was taken, anti-join the corpus against your deletion ledger " +
           "and re-run.")
     }
-    stagedRebuild(spark, path, cut, meta, withRaw = has(PostingsKind),
+    stagedRebuild(spark, path, cut, meta, withRaw = kind == PostingsKind,
       snap, midHook)
   }
 
   /** The shared staged-rebuild machinery behind [[rebuild]] and
     * [[rebuildFrom]]: stage every flavor in the store's own recorded
-    * configuration, stamp past the tombstones, publish atomically.
+    * configuration through ONE [[buildStore]] pass (one assignment feeds
+    * every flavor), stamp past the tombstones, publish atomically.
     * `corpus` columns: (vec_id, embedding, meta…), already lineage-cut.
     */
   private def stagedRebuild(spark: SparkSession, path: String,
                             corpus: DataFrame, meta: Seq[String],
                             withRaw: Boolean, snap: StoreSnapshot,
                             midHook: () => Unit): Unit = {
-    def has(kind: String) = generations(spark, path, kind)
-      .exists { case (_, p) => isCommitted(spark, p) }
-    val hadPq = has(PqCodesKind)
-    val hadSq = has(SqCodesKind)
-    // read every flavor's build config BEFORE any save rewrites a marker
+    val hadPq = hasLive(spark, path, PqCodesKind)
+    val hadSq = hasLive(spark, path, SqCodesKind)
+    // read every flavor's build config BEFORE any marker is rewritten
     val pqMeta = readBuildMeta(spark, metaPath(path))
     val sqMeta = readBuildMeta(spark, sqMetaPath(path))
-    val ivfMeta = readBuildMeta(spark, ivfMetaPath(path))
+    // the coarse geometry — centroid training AND the assignment mode —
+    // belongs to whichever marker owns it (PQ, else SQ, else IVF): a
+    // flat-built store re-assigned two-level would route whole families
+    // off-macro (measured recall 0.0 on the 1000x family fixture,
+    // SCALING.md), and every staged flavor shares the one assignment
+    val geo =
+      if (hadPq) pqMeta
+      else if (hadSq) sqMeta
+      else readBuildMeta(spark, ivfMetaPath(path))
+    // the mrl_meta marker is build-shape-only and stays in place
+    val mrl = if (hasLive(spark, path, MrlCodesKind)) Seq(mrlMeta(spark, path)) else Nil
     // rows republished under surviving tombstones must outrank them
     val stampSeq = Tombstones.nextSeq(spark, path)
     // a mutation that slipped in between the caller's snapshot and this
@@ -1936,101 +1688,29 @@ object Index {
       val fs = fsOf(spark, sp)
       if (fs.exists(sp)) { fs.delete(sp, true); () }
     }
-    if (hadPq)
-      saveIvfPq(corpus, stage, nSub = pqMeta.nSub, nCode = pqMeta.nCode,
-        metaCols = meta, trained = pqMeta.trained, withRaw = withRaw,
-        trainIters = pqMeta.trainIters, residual = pqMeta.residual,
-        forceFlat = pqMeta.flat, insSeq = stampSeq)
-    else if (hadSq && !withRaw)
-      // SQ-only codes store: one save writes centroids + codes in the
-      // store's own coding, and no raw flavor is created where none
-      // existed — the store keeps its storage shape
-      saveIvfSq(corpus, stage, metaCols = meta, trained = sqMeta.trained,
-        trainIters = sqMeta.trainIters, residual = sqMeta.residual,
-        forceFlat = sqMeta.flat, withRaw = false, insSeq = stampSeq)
-    else {
-      // the centroids' recorded training lives with whichever save wrote
-      // them: sq_meta on an SQ+raw store, ivf_meta on a flat store
-      val cfg = if (hadSq) sqMeta else ivfMeta
-      saveIvf(corpus, stage, metaCols = meta, trained = cfg.trained,
-        trainIters = cfg.trainIters, forceFlat = cfg.flat,
-        insSeq = stampSeq)
-    }
     if (hadSq && (hadPq || withRaw)) {
-      // the SQ flavor must share the NEW assignment: re-encode from the
-      // same corpus against the staged centroid table, in the store's
-      // own coding. The sq_meta marker is updated IN PLACE at the real
-      // path (markers are coding-preserved — only the `trained`
-      // ownership field can move on a combined store — and serves read
-      // them eagerly at plan time, so pre-planned serves are unaffected)
-      locally {
-        import spark.implicits._
-        Seq((sqMeta.residual, if (hadPq) pqMeta.trained else sqMeta.trained,
-            sqMeta.trainIters, if (hadPq) pqMeta.flat else sqMeta.flat))
-          .toDF("residual", "trained", "train_iters", "flat")
-          .write.mode("overwrite").parquet(sqMetaPath(path))
-      }
-      val cents = spark.read.parquet(centroidsDir(spark, stage))
-      // the assignment mode is build GEOMETRY the SQ codes must share
-      // with the staged postings: a flat-built store re-assigned
-      // two-level would route whole families off-macro (measured recall
-      // 0.0 on the 1000x family fixture, SCALING.md) — like `trained`,
-      // the combined store's geometry belongs to whichever save built
-      // the staged centroids
-      val assignment = assignedTo(corpus, stage,
-        forceFlat = if (hadPq) pqMeta.flat else sqMeta.flat,
-        superProbe = Similarity.defaultSuperProbe)
-      val rows =
-        if (sqMeta.residual) sqResidualRows(assignment, cents)
-        else sqRowsFromAssignment(assignment) // v/norm already on the assignment
-      val withMeta =
-        if (meta.isEmpty) rows
-        else rows.join(corpus.select((Seq("vec_id") ++ meta).map(col): _*),
-          "vec_id")
-      withMeta
-        .withColumn("ins_seq", lit(stampSeq))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(sqCodesPath(stage))
+      // a combined store's sq_meta marker is updated IN PLACE at the real
+      // path (markers are coding-preserved — only the geometry ownership
+      // fields can move — and serves read them eagerly at plan time, so
+      // pre-planned serves are unaffected)
+      import spark.implicits._
+      Seq((sqMeta.residual, geo.trained, sqMeta.trainIters, geo.flat))
+        .toDF("residual", "trained", "train_iters", "flat")
+        .write.mode("overwrite").parquet(sqMetaPath(path))
     }
-    if (has(MrlCodesKind)) {
-      // the MRL prefix flavor shares the staged raw flavor's fresh
-      // assignment (an MRL store always carries raw postings — the
-      // refine half of its serve), re-sliced at the store's recorded
-      // width AND coding; the mrl_meta marker is build-shape-only and
-      // stays in place. Prefix rows derive from the STAGED POSTINGS
-      // (they carry vec_id, v, cell — saveIvfMrl's own shape): no
-      // corpus re-scan, no re-attach join; slice(v) == the old
-      // mrl{Sq}Rows' slice of the embedding cast, bit-exact.
-      val mm = mrlMeta(spark, path)
-      val post = spark.read.parquet(s"$stage/$PostingsKind")
-      val vp = slice(col("v"), 1, mm.dims)
-      val rows =
-        if (mm.quantized)
-          post
-            .withColumn("pv", vp)
-            .withColumn("pn", sqrt(VecFold.dot(col("pv"), col("pv"))))
-            .withColumn("scale", VecQuant.maxAbs(col("pv")))
-            .withColumn("safe_scale",
-              when(col("scale") === 0d, lit(1.0)).otherwise(col("scale")))
-            .select(col("vec_id"), col("cell"),
-              VecQuant.sqPack(col("pv"), col("safe_scale")).as("qb"),
-              round(when(col("pn") === 0d, lit(0.0))
-                .otherwise(col("scale") / col("pn")), 9).as("r"))
-        else
-          post
-            .withColumn("vp", vp)
-            .select(col("vec_id"), col("cell"), col("vp"),
-              sqrt(VecFold.dot(col("vp"), col("vp"))).as("vpn"))
-      val withMeta =
-        if (meta.isEmpty) rows
-        else rows.join(corpus.select((Seq("vec_id") ++ meta).map(col): _*),
-          "vec_id")
-      withMeta
-        .withColumn("ins_seq", lit(stampSeq))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(mrlCodesPath(stage))
+    // only the cell budget resets (fresh autoCells over the live corpus);
+    // the store keeps its storage shape: a codes-only store gets no raw
+    // flavor, and an MRL store (always raw-flavored) re-slices from the
+    // staged postings at its recorded width and coding
+    buildStore(corpus, stage, nCells = 16, trained = geo.trained,
+      trainIters = geo.trainIters, forceFlat = geo.flat,
+      superProbe = Similarity.defaultSuperProbe, metaCols = meta,
+      insSeq = stampSeq) { (a, cents) =>
+      (if (hadPq) Seq(Pq(pqCodebook(corpus, stage, a, cents, pqMeta.nSub,
+        pqMeta.nCode, pqMeta.trained, pqMeta.trainIters, pqMeta.residual),
+        pqMeta.residual)) else Nil) ++
+        (if (withRaw) Seq(Raw) else Nil) ++
+        (if (hadSq) Seq(Sq(sqMeta.residual)) else Nil) ++ mrl
     }
     midHook()
     // the conflict fence: everything above read a snapshot of the store;
@@ -2172,19 +1852,17 @@ object Index {
                      vacuumKeep: Option[Int] = None): DataFrame =
     Lease.withLease(spark, path, "maintain") {
     import spark.implicits._
-    def has(kind: String) = generations(spark, path, kind)
-      .exists { case (_, p) => isCommitted(spark, p) }
     val st = stats(spark, path).head()
     val dilution = st.getDouble(3)
     val ds = deleteStats(spark, path).head()
     val maskedFrac = ds.getDouble(3)
-    val kind = Seq(PostingsKind, PqCodesKind, SqCodesKind).find(has).get
+    val kind = primaryKind(spark, path).get
     val files = countDataFiles(spark, liveDir(spark, path, kind))
     val filesPerCell = files.toDouble / math.max(1L, st.getLong(1))
     val action =
       if (dilution > maxDilution) rebuildWith match {
         case Some(corpus) => rebuildFrom(spark, path, corpus); "rebuild"
-        case None if has(PostingsKind) => rebuild(spark, path); "rebuild"
+        case None if kind == PostingsKind => rebuild(spark, path); "rebuild"
         // codes-only store past the dilution threshold with no corpus
         // supplied: report the need instead of silently falling through
         case None => "rebuild-needed"

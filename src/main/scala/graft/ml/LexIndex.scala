@@ -111,6 +111,16 @@ object LexIndex {
     * back on doc_id after aggregation — at 100 TB that join is a second
     * full shuffle of the posting stream; a few carried metadata bytes per
     * token are the cheaper trade.
+    *
+    * Preconditions: the lag-run survivor filter needs a NON-NULL `th`
+    * (h64 over exploded non-null shingles guarantees it; a null th has a
+    * null bucket, a partition directory no serve's pmod probe ever
+    * reads) with every duplicate (th, doc_id) contiguous under the
+    * (bucket, th, doc_id) sort, which the count window's required
+    * ordering provides. Skew: every posting of a bucket
+    * meets in one task, so a stopword-heavy term makes its
+    * `pmod(th, nb)` bucket a hot key — that task sorts and writes the
+    * term's whole posting list while the rest finish early.
     */
   private[graft] def bucketedPostingsOf(docs: DataFrame, nb: Long,
                                         metaCols: Seq[String] = Nil): DataFrame = {

@@ -63,6 +63,13 @@ object Retrieval {
     * constant per (doc_id, th), so which duplicate survives is
     * value-irrelevant; th is never null here (h64 over exploded non-null
     * shingles), which the run comparison relies on.
+    *
+    * Skew precondition: the exchange is on doc_id ALONE, so one
+    * document's whole term stream lands in ONE task — a giant document
+    * (a concatenated dump, a whole book) is a hot key whose sort runs
+    * single-threaded and spills alone while the other tasks idle. Split
+    * such documents upstream; the bound is the largest document, not
+    * the corpus.
     */
   private[graft] def termFrequencies(terms: DataFrame): DataFrame = {
     val byKey = Window.partitionBy("doc_id", "th")

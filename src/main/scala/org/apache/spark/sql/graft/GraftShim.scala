@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -13,4 +14,11 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object GraftShim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Block until the ASYNC listener bus has delivered every event posted
+    * so far, so a listener's counters are complete for the jobs that
+    * already finished (`LiveListenerBus.waitUntilEmpty` is
+    * `private[spark]`, hence this namespace).
+    */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -187,4 +187,32 @@ class VecQuantSpec extends SparkSpec {
     assert(r.getSeq[Any](2) == Seq(42.0, null, -127.0))
     assert(r.getSeq[Any](3) == Seq(42L, null, -127L))
   }
+
+  test("mis-typed inputs fail at analysis, not on an executor") {
+    import org.apache.spark.sql.{AnalysisException, Column}
+    import org.apache.spark.sql.graft.GraftShim
+    val df = Seq((Seq(1.0, 2.0), Array[Byte](1, 2), 0.5, "x", 3))
+      .toDF("v", "qb", "r", "s", "i")
+    def failsAnalysis(c: Column): Unit = {
+      val e = intercept[AnalysisException](df.select(c))
+      assert(e.getMessage.contains("DATATYPE_MISMATCH"), e.getMessage)
+    }
+    failsAnalysis(VecQuant.sub(col("v"), col("s")))
+    failsAnalysis(VecQuant.sub(col("qb"), col("v")))
+    failsAnalysis(VecQuant.reconstruct(col("s"), col("qb"), col("r")))
+    failsAnalysis(VecQuant.reconstruct(col("v"), col("v"), col("r")))
+    failsAnalysis(VecQuant.reconstruct(col("v"), col("qb"), col("s")))
+    val bloom = spark.sparkContext.broadcast(
+      org.apache.spark.util.sketch.BloomFilter.create(16))
+    def contains(c: Column): Column = GraftShim.column(
+      BloomContains(GraftShim.expression(c), bloom))
+    failsAnalysis(contains(col("i")))
+    failsAnalysis(contains(col("s")))
+    // the declared types still resolve and evaluate
+    val ok = df.select(VecQuant.sub(col("v"), col("v")),
+      VecQuant.reconstruct(col("v"), col("qb"), col("r")),
+      contains(col("i").cast("long"))).head()
+    assert(ok.getSeq[Double](0) == Seq(0.0, 0.0))
+    assert(!ok.getBoolean(2))
+  }
 }

@@ -1,6 +1,7 @@
 package graft.ml
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Persisted-index serving path: round-trip equality with the inline
@@ -268,39 +269,62 @@ class IndexSpec extends SparkSpec {
     assert(probed.exists(_ <= 4), s"probe list not bounded by nProbe: $probed")
   }
 
-  test("appendIvf: split build+append serves bit-equal to a one-shot build") {
-    // base holds the 16 smallest vec_ids → the frozen centroid set equals
-    // the one-shot build's, so the two stores must serve identical results
-    val path = freshPath("append")
-    Index.saveIvf(emb.where(col("vec_id") < 60), path)
-    Index.appendIvf(spark, path, emb.where(col("vec_id") >= 60))
-    val isQ = pmod(col("vec_id"), lit(10)) === 0
-    val served = Index.ivfTopKIndexed(spark, path, emb.where(isQ), k = 5)
-      .orderBy("query_id", "rank")
-      .as[(Long, Long, Double, Int)].collect().toSeq
-    val oneShot = Similarity.ivfTopK(emb, isQ, k = 5)
-      .orderBy("query_id", "rank")
-      .as[(Long, Long, Double, Int)].collect().toSeq
-    assert(served === oneShot)
-    // appended vectors are really discoverable: some neighbor id >= 60
-    assert(served.exists(_._2 >= 60L), "no appended vector ever surfaced")
-  }
+  /** One flavor of the split-build check: its save, its append, its
+    * serve, and (IVF/PQ) the inline operator the one-shot store matches.
+    */
+  private case class SplitCase(
+      name: String,
+      save: (DataFrame, String) => Unit,
+      append: (DataFrame, String) => Unit,
+      serve: (String, DataFrame) => DataFrame,
+      inline: Option[Column => DataFrame] = None)
 
-  test("appendIvfPq: split build+append serves bit-equal to a one-shot build") {
-    // base holds the 16 smallest vec_ids → BOTH frozen quantizer seed
-    // sets (coarse centroids and PQ codebook) equal the one-shot build's
-    val path = freshPath("pqappend")
-    Index.saveIvfPq(emb.where(col("vec_id") < 60), path)
-    Index.appendIvfPq(spark, path, emb.where(col("vec_id") >= 60))
-    val isQ = pmod(col("vec_id"), lit(10)) === 0
-    val served = Index.ivfPqTopKIndexed(spark, path, emb.where(isQ), k = 5)
-      .orderBy("query_id", "rank")
-      .as[(Long, Long, Long, Int)].collect().toSeq
-    val oneShot = Similarity.ivfPqTopK(emb, isQ, k = 5)
-      .orderBy("query_id", "rank")
-      .as[(Long, Long, Long, Int)].collect().toSeq
-    assert(served === oneShot)
-    assert(served.exists(_._2 >= 60L), "no appended vector ever surfaced")
+  private val splitCases = Seq(
+    SplitCase("appendIvf",
+      (e, p) => Index.saveIvf(e, p), (e, p) => Index.appendIvf(spark, p, e),
+      (p, q) => Index.ivfTopKIndexed(spark, p, q, k = 5),
+      Some(isQ => Similarity.ivfTopK(emb, isQ, k = 5))),
+    SplitCase("appendIvfPq",
+      (e, p) => Index.saveIvfPq(e, p), (e, p) => Index.appendIvfPq(spark, p, e),
+      (p, q) => Index.ivfPqTopKIndexed(spark, p, q, k = 5),
+      Some(isQ => Similarity.ivfPqTopK(emb, isQ, k = 5))),
+    SplitCase("appendIvfSq",
+      (e, p) => Index.saveIvfSq(e, p), (e, p) => Index.appendIvfSq(spark, p, e),
+      (p, q) => Index.ivfSqTopKIndexed(spark, p, q, k = 5)),
+    SplitCase("appendIvfSq (residual)",
+      (e, p) => Index.saveIvfSq(e, p, residual = true),
+      (e, p) => Index.appendIvfSq(spark, p, e),
+      (p, q) => Index.ivfSqTopKIndexed(spark, p, q, k = 5)),
+    SplitCase("appendIvfMrl",
+      (e, p) => Index.saveIvfMrl(e, p, prefixDims = 4),
+      (e, p) => Index.appendIvfMrl(spark, p, e),
+      (p, q) => Index.ivfMrlRerankTopKIndexed(spark, p, q, k = 5)),
+    SplitCase("appendIvfMrl (quantized)",
+      (e, p) => Index.saveIvfMrl(e, p, prefixDims = 4, quantized = true),
+      (e, p) => Index.appendIvfMrl(spark, p, e),
+      (p, q) => Index.ivfMrlRerankTopKIndexed(spark, p, q, k = 5)))
+
+  // base holds the 16 smallest vec_ids → every frozen seed quantizer (the
+  // coarse centroids, a seeded PQ codebook) equals the one-shot build's,
+  // and SQ/MRL codes are per-vector, so the split store must serve
+  // exactly what a one-shot save of the whole corpus serves
+  splitCases.foreach { c =>
+    test(s"${c.name}: split build+append serves bit-equal to a one-shot build") {
+      val split = freshPath("split")
+      c.save(emb.where(col("vec_id") < 60), split)
+      c.append(emb.where(col("vec_id") >= 60), split)
+      val oneShot = freshPath("oneshot")
+      c.save(emb, oneShot)
+      val isQ = pmod(col("vec_id"), lit(10)) === 0
+      def rows(df: DataFrame) =
+        df.orderBy("query_id", "rank").collect().toSeq
+      val served = rows(c.serve(split, emb.where(isQ)))
+      assert(served.nonEmpty)
+      assert(served === rows(c.serve(oneShot, emb.where(isQ))))
+      c.inline.foreach(f => assert(served === rows(f(isQ))))
+      // appended vectors are really discoverable: some neighbor id >= 60
+      assert(served.exists(_.getLong(1) >= 60L), "no appended vector ever surfaced")
+    }
   }
 
   test("compact folds per-append files to one per cell, serve bit-equal") {
