@@ -70,8 +70,11 @@ object VecQuant {
       GraftShim.expression(scale)))
 
   /** Exact integer dot of two packed code vectors widened to double at
-    * the end — exactly the `sqDot` UDF: Σ a(i)·b(i) in Long over
-    * min(|a|,|b|) elements, null if either side is null.
+    * the end: Σ a(i)·b(i) in Long over min(|a|,|b|) elements, null if
+    * either side is null. |q| ≤ 127 keeps every product and the sum
+    * exact, so the score is order-free and bit-reproducible (the DuckDB
+    * twin computes list_dot_product over the same integer-valued
+    * doubles); bit-equal to the UDF it replaced (VecQuantSpec).
     */
   def byteDot(a: Column, b: Column): Column =
     GraftShim.column(ByteDot(GraftShim.expression(a),

@@ -2,7 +2,6 @@ package graft.ml
 
 import graft.functions.{VecFold, VecQuant}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Persisted ANN indexes: build ONCE, serve every later query batch from
@@ -132,6 +131,8 @@ object Index {
 
   private def metaPath(path: String) = s"$path/meta"
   private def ivfMetaPath(path: String) = s"$path/ivf_meta"
+  private def sqMetaPath(path: String) = s"$path/sq_meta"
+  private def mrlMetaPath(path: String) = s"$path/mrl_meta"
 
   /** LIVE quantizer directories — every read resolves through the
     * generation machinery (a rebuilt store's quantizers live in
@@ -149,7 +150,7 @@ object Index {
     * `residual`); stores written before the marker existed are absolute.
     */
   private[graft] def isResidual(spark: SparkSession, path: String): Boolean =
-    readBuildMeta(spark, metaPath(path)).residual
+    buildMetaOf(new Markers(spark, path).pq).residual
 
   /** A store's build configuration, read back from its marker table —
     * what [[rebuild]] must re-invoke the save with. Markers written
@@ -194,34 +195,32 @@ object Index {
           get("flat", false)(row.getBoolean))
     }
 
-  private def readBuildMeta(spark: SparkSession, dir: String): BuildMeta =
-    buildMetaOf(readMetaRow(spark, dir))
-
-  /** The marker owning the store's coarse geometry, as (marker dir, its
-    * build config) from ONE marker read — ownership mirrors
-    * [[rebuild]]'s: the PQ marker if present, else SQ, else IVF. Its
-    * `flat` is the recorded assignment mode — flat (`forceFlat` build)
-    * or two-level past [[Similarity.twoLevelMinCells]]. Appends must
-    * route arriving vectors the way the build routed the corpus: a
-    * flat-built 400-cell store whose appends route two-level parks
-    * vectors in cells the flat query probe never reads (whole families
-    * off-macro — measured recall 0.0 on the 1000× family fixture,
-    * SCALING.md). The same row answers the PQ/SQ residual flag when that
-    * flavor owns the marker, so an append reads its marker once.
+  /** A store's marker rows, each read at most once per operation and only
+    * when first asked for: geometry ownership, the per-flavor coding
+    * resolvers ([[pqOf]], [[sqOf]], [[mrlOf]]) and [[stagedRebuild]] all
+    * read through one instance, so an append whose flavor owns the
+    * geometry marker pays for that marker once.
     */
-  private def geometryMarker(spark: SparkSession,
-                             path: String): (String, BuildMeta) = {
-    def exists(dir: String) = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      fsOf(spark, p).exists(p)
-    }
-    val markerDir = Seq(metaPath(path), sqMetaPath(path)).find(exists)
-      .getOrElse(ivfMetaPath(path))
-    // ONE marker read serves both the legacy-column check and the meta
-    // row (reading it twice doubled the per-op marker cost on every
-    // append/rebuild path — the round-14 lifecycle regression's prime
-    // suspect)
-    val meta = readMetaRow(spark, markerDir)
+  private final class Markers(spark: SparkSession, val path: String) {
+    lazy val pq = readMetaRow(spark, metaPath(path))
+    lazy val sq = readMetaRow(spark, sqMetaPath(path))
+    lazy val ivf = readMetaRow(spark, ivfMetaPath(path))
+    lazy val mrl = readMetaRow(spark, mrlMetaPath(path))
+  }
+
+  /** The build config of the marker owning the store's coarse geometry
+    * — ownership mirrors [[rebuild]]'s: the PQ marker if present, else
+    * SQ, else IVF. Its `flat` is the recorded assignment mode — flat
+    * (`forceFlat` build) or two-level past [[Similarity.twoLevelMinCells]].
+    * Appends must route arriving vectors the way the build routed the
+    * corpus: a flat-built 400-cell store whose appends route two-level
+    * parks vectors in cells the flat query probe never reads (whole
+    * families off-macro — measured recall 0.0 on the 1000× family
+    * fixture, SCALING.md). Read through `m`, so the owning flavor's
+    * coding resolver reuses the same row.
+    */
+  private def geometryMarker(spark: SparkSession, m: Markers): BuildMeta = {
+    val meta = m.pq.orElse(m.sq).orElse(m.ivf)
     // LEGACY-STORE migration warning: markers written before the `flat`
     // column record nothing about the assignment mode, so this defaults
     // to two-level — which is only WRONG if the store was flat-built
@@ -233,14 +232,14 @@ object Index {
     // permanently converts the store to two-level geometry unless the
     // rebuild is re-run with forceFlat via a fresh save).
     if (meta.exists(!_._1.contains("flat")) &&
-        spark.read.parquet(centroidsDir(spark, path)).count() >=
+        spark.read.parquet(centroidsDir(spark, m.path)).count() >=
           Similarity.twoLevelMinCells)
-      System.err.println(s"[graft.Index] WARNING: store at $path predates " +
+      System.err.println(s"[graft.Index] WARNING: store at ${m.path} predates " +
         "the `flat` assignment-mode marker and has enough cells for " +
         "two-level routing — if it was built forceFlat = true, appends " +
         "and rebuilds will route two-level and miss the flat probe set " +
         "(recall collapse). Rebuild the store to stamp its mode.")
-    (markerDir, buildMetaOf(meta))
+    buildMetaOf(meta)
   }
 
   /** Whether the store has a committed generation of `kind`. */
@@ -308,29 +307,66 @@ object Index {
     */
   private type Cents = Array[(Long, Array[Double], Double)]
 
-  /** A dense flavor's encoder — the ONE write step that differs between
-    * store flavors: how assigned rows (vec_id, v, norm, cell) become the
-    * stored rows of its data kind. Everything around it (centroid
-    * resolution, assignment, metadata join-back, the seq stamp and the
-    * cell-partitioned write) is the shared pipeline of [[buildStore]] and
-    * [[appendStore]].
+  /** A dense flavor's codec — the ONE step that differs between store
+    * flavors on either path: how assigned rows (vec_id, v, norm, cell)
+    * become the stored rows of its data kind ([[encode]]), and how those
+    * rows score against a query batch ([[scoreKernel]]). Everything around
+    * it is shared: centroid resolution, assignment, metadata join-back,
+    * the seq stamp and the cell-partitioned write on the write side
+    * ([[buildStore]], [[appendStore]]); probe, candidate scan, top-k and
+    * refine on the read side ([[serve]]).
     */
   private sealed abstract class Enc(val kind: String, val core: Set[String])
   /** The raw flavor: the assignment itself. */
   private case object Raw extends Enc(PostingsKind, postingsCore)
   /** PQ codes against `codebook` (sub, code, cw); `residual` codes
-    * x − c[cell] instead of x.
+    * x − c[cell] instead of x. `markedSubs` is the marker's recorded
+    * subspace count; a store without one (legacy) pays one distinct
+    * count over the codebook, and only when a serve asks — trusting the
+    * default would silently mis-slice subvectors on a non-default legacy
+    * store (ADVICE r15).
     */
-  private final case class Pq(codebook: DataFrame, residual: Boolean)
-      extends Enc(PqCodesKind, pqCodesCore)
+  private final case class Pq(codebook: DataFrame, residual: Boolean,
+                              markedSubs: Option[Int] = None)
+      extends Enc(PqCodesKind, pqCodesCore) {
+    lazy val nSub: Int =
+      markedSubs.getOrElse(codebook.select("sub").distinct().count().toInt)
+  }
   /** Per-vector int8 codes of x, or of x − c[cell] when `residual`. */
   private final case class Sq(residual: Boolean)
       extends Enc(SqCodesKind, sqCodesCore)
   /** The first-`dims` prefix, raw or int8-quantized — the MRL store's
-    * recorded build shape ([[mrlMeta]]).
+    * recorded build shape ([[mrlOf]]).
     */
   private final case class Mrl(dims: Int, quantized: Boolean)
       extends Enc(MrlCodesKind, if (quantized) sqCodesCore else mrlCodesCore)
+
+  /** The per-flavor coding resolvers every serve, append and
+    * [[stagedRebuild]] call: each reads only its own flavor's marker
+    * (through `m`), so the raw flavor's paths read none.
+    *   - PQ: the residual flag and subspace count of the `meta` marker,
+    *     coding against `codebook` (the live one, or a rebuild's fresh
+    *     one); a store without a marker predates residual coding.
+    *   - SQ: the residual flag of `sq_meta` (absolute when absent).
+    *   - MRL: prefix width + whether the prefix is int8-quantized, from
+    *     `mrl_meta`; markers written before `quantized` are raw-prefix.
+    */
+  private def pqOf(m: Markers, codebook: DataFrame): Pq = {
+    val meta = buildMetaOf(m.pq)
+    Pq(codebook, meta.residual,
+      m.pq.filter(_._1.contains("n_sub")).map(_ => meta.nSub))
+  }
+
+  private def sqOf(m: Markers): Sq = Sq(buildMetaOf(m.sq).residual)
+
+  private def mrlOf(m: Markers): Mrl = m.mrl match {
+    case None => throw new IllegalArgumentException(
+      s"no MRL marker at ${mrlMetaPath(m.path)} — not an MRL store")
+    case Some((cols, row)) =>
+      Mrl(row.getInt(row.fieldIndex("prefix_dims")),
+        cols.contains("quantized") &&
+          row.getBoolean(row.fieldIndex("quantized")))
+  }
 
   /** Assign rows to cells: rank each normed vector against the resolved
     * centroids ([[Similarity.ivfAssign]] semantics — two-level past the
@@ -395,7 +431,7 @@ object Index {
   private def encode(enc: Enc, a: DataFrame, cents: Cents): DataFrame =
     enc match {
       case Raw => a
-      case Pq(codebook, residual) =>
+      case Pq(codebook, residual, _) =>
         encodeCells(a.sparkSession,
           if (residual) residuals(a, cents) else a, codebook)
       case Sq(false) =>
@@ -503,21 +539,22 @@ object Index {
     * assign the batch against the store's FROZEN centroids, routed the
     * way the build routed, encode each flavor `flavors` names from that
     * one assignment, and fence-append them in order under ONE mutation
-    * seq. `flavors` gets the geometry marker ([[geometryMarker]]) so a
-    * flavor's coding flag costs no second marker read. Every kind's
-    * metadata set is derived from — and validated against — its own
-    * stored schema before anything is written: an append that omitted a
-    * build-time metadata column would write rows a filtered serve
-    * silently never matches.
+    * seq. `flavors` resolves its codings through the same [[Markers]] the
+    * geometry was read from, so the owning flavor's marker is read once.
+    * Every kind's metadata set is derived from — and validated against —
+    * its own stored schema before anything is written: an append that
+    * omitted a build-time metadata column would write rows a filtered
+    * serve silently never matches.
     */
   private def appendStore(spark: SparkSession, path: String,
                           newEmb: DataFrame, superProbe: Int,
                           metaCols: Seq[String])
-                         (flavors: (String, BuildMeta) => Seq[Enc]): Unit = {
+                         (flavors: Markers => Seq[Enc]): Unit = {
     val cents = Similarity.collectCentroids(
       spark.read.parquet(centroidsDir(spark, path)))
-    val (markerDir, geo) = geometryMarker(spark, path)
-    val encs = flavors(markerDir, geo)
+    val m = new Markers(spark, path)
+    val geo = geometryMarker(spark, m)
+    val encs = flavors(m)
     val a = assign(newEmb, cents, geo.flat, superProbe)
     val metas = encs.map(e =>
       appendMetaCols(spark, liveDir(spark, path, e.kind), e.core, newEmb, metaCols))
@@ -693,12 +730,20 @@ object Index {
         col("cell"))
   }
 
-  /** (query_id, cell) probe pairs + the normalized query table: the
-    * query-side coarse ranking, exact flat scan over the stored
-    * centroids (ties and 9-dp rounding exactly as the inline path).
+  /** A query batch's probe set: the (query_id, cell) `pairs`, the
+    * normalized query table `q`, and the distinct probed `cells`
+    * collected driver-side (the scan cut [[prunedToProbes]] takes —
+    * bounded by nq·nProbe, never corpus-side).
+    */
+  private final case class Probes(pairs: DataFrame, q: DataFrame,
+                                  cells: Array[Long])
+
+  /** Step 1 of [[serve]], the query-side coarse ranking: exact flat scan
+    * over the stored centroids (ties and 9-dp rounding exactly as the
+    * inline path).
     */
   private def probeSet(spark: SparkSession, path: String, queries: DataFrame,
-                       nProbe: Int): (DataFrame, DataFrame) = {
+                       nProbe: Int): Probes = {
     val cents = Similarity.collectCentroids(
       spark.read.parquet(centroidsDir(spark, path)))
     val q = Similarity.normed(queries)
@@ -707,7 +752,8 @@ object Index {
       twoLevelMin = Int.MaxValue, seedArr = cents)
     val probes = ranked.select(col("vec_id").as("query_id"),
       explode(slice(col("cells"), 1, nProbe)).as("cell"))
-    (probes, q)
+    Probes(probes, q,
+      probes.select("cell").distinct().collect().map(_.getLong(0)))
   }
 
   /** The serving-path scan cut: restrict a cell-partitioned store to the
@@ -766,9 +812,6 @@ object Index {
     pruned.where(col(partitionCol).isin(probeVals.toSeq: _*))
   }
 
-  private def probedCellVals(probes: DataFrame): Array[Long] =
-    probes.select("cell").distinct().collect().map(_.getLong(0))
-
   /** Refresh a stored IVF-Flat index WITHOUT a rebuild: assign only the
     * arriving batch against the STORED centroids (the
     * [[Similarity.ivfAssignIncremental]] daily-refresh contract —
@@ -787,7 +830,7 @@ object Index {
                 superProbe: Int = Similarity.defaultSuperProbe,
                 metaCols: Seq[String] = Nil): Unit =
     Lease.withLease(spark, path, "appendIvf") {
-      appendStore(spark, path, newEmb, superProbe, metaCols)((_, _) => Seq(Raw))
+      appendStore(spark, path, newEmb, superProbe, metaCols)(_ => Seq(Raw))
     }
 
   /** Refresh a stored IVF-PQ index without a rebuild — the compressed
@@ -808,11 +851,8 @@ object Index {
                   superProbe: Int = Similarity.defaultSuperProbe,
                   metaCols: Seq[String] = Nil): Unit =
     Lease.withLease(spark, path, "appendIvfPq") {
-      appendStore(spark, path, newEmb, superProbe, metaCols) { (dir, geo) =>
-        // the PQ marker owns the geometry whenever it exists; a store
-        // without one predates residual coding (absolute)
-        Pq(spark.read.parquet(codewordsDir(spark, path)),
-          residual = dir == metaPath(path) && geo.residual) +:
+      appendStore(spark, path, newEmb, superProbe, metaCols) { m =>
+        pqOf(m, spark.read.parquet(codewordsDir(spark, path))) +:
           rawInStep(spark, path)
       }
     }
@@ -940,22 +980,6 @@ object Index {
         round(col("n_masked").cast("double") / col("n_versions_stored"), 4))
   }
 
-  private def sqMetaPath(path: String) = s"$path/sq_meta"
-
-  /** Whether the store's SQ codes are residual-coded ([[saveIvfSq]]
-    * `residual`); stores written before the marker are absolute.
-    */
-  private def isSqResidual(spark: SparkSession, path: String): Boolean =
-    readBuildMeta(spark, sqMetaPath(path)).residual
-
-  /** Exact integer dot of two packed code vectors, widened to double at
-    * the end — |q| ≤ 127 keeps every product and the sum exact in Long,
-    * so the score is order-free and bit-reproducible (the DuckDB twin
-    * computes list_dot_product over the same integer-valued doubles).
-    * Codegen expression; bit-equal to the UDF it replaced (VecQuantSpec).
-    */
-  private def sqDot(a: Column, b: Column): Column = VecQuant.byteDot(a, b)
-
   /** Build + persist the SCALAR-QUANTIZED IVF store (cf. FAISS
     * IndexIVFScalarQuantizer, QT_8bit-style): cell-partitioned int8
     * code vectors — 1 byte/dim + an 8-byte rescale factor ≈ 8× smaller
@@ -1001,26 +1025,8 @@ object Index {
                   superProbe: Int = Similarity.defaultSuperProbe,
                   metaCols: Seq[String] = Nil): Unit =
     Lease.withLease(spark, path, "appendIvfSq") {
-      appendStore(spark, path, newEmb, superProbe, metaCols) { (dir, geo) =>
-        Sq(if (dir == sqMetaPath(path)) geo.residual
-           else isSqResidual(spark, path)) +: rawInStep(spark, path)
-      }
-    }
-
-  private def mrlMetaPath(path: String) = s"$path/mrl_meta"
-
-  /** The MRL store's recorded build shape: prefix width + whether the
-    * prefix flavor is int8-quantized. One marker read ([[readMetaRow]]).
-    * Stores written before the `quantized` column are raw-prefix.
-    */
-  private def mrlMeta(spark: SparkSession, path: String): Mrl =
-    readMetaRow(spark, mrlMetaPath(path)) match {
-      case None => throw new IllegalArgumentException(
-        s"no MRL marker at ${mrlMetaPath(path)} — not an MRL store")
-      case Some((cols, row)) =>
-        Mrl(row.getInt(row.fieldIndex("prefix_dims")),
-          cols.contains("quantized") &&
-            row.getBoolean(row.fieldIndex("quantized")))
+      appendStore(spark, path, newEmb, superProbe, metaCols)(m =>
+        sqOf(m) +: rawInStep(spark, path))
     }
 
   /** Build + persist the MATRYOSHKA serving tier: a cell-partitioned
@@ -1090,8 +1096,8 @@ object Index {
                    superProbe: Int = Similarity.defaultSuperProbe,
                    metaCols: Seq[String] = Nil): Unit =
     Lease.withLease(spark, path, "appendIvfMrl") {
-      appendStore(spark, path, newEmb, superProbe, metaCols)((_, _) =>
-        Seq(Raw, mrlMeta(spark, path)))
+      appendStore(spark, path, newEmb, superProbe, metaCols)(m =>
+        Seq(Raw, mrlOf(m)))
     }
 
   /** The MATRYOSHKA serve: prefix-cosine shortlist from the stored
@@ -1107,103 +1113,13 @@ object Index {
   def ivfMrlRerankTopKIndexed(spark: SparkSession, path: String,
                               queries: DataFrame, k: Int, rerank: Int = 0,
                               nProbe: Int = 4,
-                              candWhere: Column = lit(true)): DataFrame = {
-    val depth = Similarity.autoRerank(k, rerank)
-    val (probes, q) = probeSet(spark, path, queries, nProbe)
-    val mm = mrlMeta(spark, path)
-    // tombstone mask BEFORE ranking (the ivfTopKIndexed contract)
-    val codes = Tombstones.mask(
-      prunedToProbes(spark, liveDir(spark, path, MrlCodesKind),
-        probedCellVals(probes)).where(candWhere),
-      Tombstones.readAll(spark, path), "vec_id")
-    // shortlist scoring follows the store's recorded prefix coding:
-    // raw-prefix cosine, or (quantized tier) the absolute-SQ integer
-    // code dot × the stored rescale factor — a rank-only surrogate,
-    // which is all a shortlist that feeds an exact refine needs
-    val scored =
-      if (mm.quantized) {
-        // the query prefix is coded like the stored one ([[mrlRows]])
-        val qp = withScale(queries.select(col("vec_id"),
-            slice(col("embedding").cast("array<double>"), 1, mm.dims)
-              .as("pv")), "pv")
-          .select(col("vec_id").as("query_id"), sqBytes("pv").as("qqb"))
-        codes.join(broadcast(probes), Seq("cell"))
-          .where(col("vec_id") =!= col("query_id"))
-          .join(broadcast(qp), "query_id")
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            (sqDot(col("qb"), col("qqb")) * col("r")).as("cosine"))
-      } else {
-        val qp = queries.select(col("vec_id").as("query_id"),
-            slice(col("embedding").cast("array<double>"), 1, mm.dims)
-              .as("qpv"))
-          .withColumn("qpn", sqrt(VecFold.dot(col("qpv"), col("qpv"))))
-        codes.join(broadcast(probes), Seq("cell"))
-          .where(col("vec_id") =!= col("query_id"))
-          .join(broadcast(qp), "query_id")
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            round(Similarity.safeCosine(VecFold.dot(col("vp"), col("qpv")),
-              col("vpn"), col("qpn")), 6).as("cosine"))
-      }
-    val short = Similarity.topK(scored, depth)
-      .select("query_id", "neighbor_id")
-    refineExact(spark, path, probes, q, short, k)
-  }
-
-  /** Coding-aware SQ candidate scoring over the masked, probe-pruned
-    * codes — the ONE ranking kernel both SQ serves share, so the rerank
-    * shortlist can never diverge from the plain serve's coding branch
-    * (a residual store shortlisted with the absolute integer dot would
-    * rank residual-coded bytes as if they were absolute — silently
-    * garbage, exactly what the `sq_meta` marker exists to prevent).
-    *   - residual store: reconstruct x̂ = c + qb·r/127 per candidate and
-    *     rank by the true cosine of the dequantized vector against the
-    *     FLOAT query (asymmetric distance — the query is never
-    *     quantized); a real approximate cosine.
-    *   - absolute store: the EXACT integer code dot times the stored
-    *     rescale factor — rank-equal to [[Similarity.int8TopK]]
-    *     restricted to the probed cells (the query-side factor is
-    *     constant per query and cannot reorder); a rank-only surrogate,
-    *     not a true cosine.
-    * Emits (query_id, neighbor_id, cosine) for the shared top-k.
-    */
-  private def sqScored(spark: SparkSession, path: String, probes: DataFrame,
-                       q: DataFrame, queries: DataFrame,
-                       candWhere: Column,
-                       asOfSeq: Option[Long] = None): DataFrame = {
-    val codes = Tombstones.mask(
-      asOfCandidates(
-        prunedToProbes(spark, liveDir(spark, path, SqCodesKind),
-          probedCellVals(probes)).where(candWhere), asOfSeq),
-      asOfTombstones(spark, path, asOfSeq), "vec_id")
-    if (isSqResidual(spark, path)) {
-      val cents = spark.read.parquet(centroidsDir(spark, path))
-        .select(col("cid").as("cell"), col("cv"))
-      val xhat = codes.join(broadcast(cents), "cell")
-        .withColumn("xh",
-          VecQuant.reconstruct(col("cv"), col("qb"), col("r")))
-      val qv = q.select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("norm").as("qnorm"))
-      xhat.join(broadcast(probes), Seq("cell"))
-        .where(col("vec_id") =!= col("query_id"))
-        .join(broadcast(qv), "query_id")
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          round(Similarity.safeCosine(VecFold.dot(col("xh"), col("qv")),
-            sqrt(VecFold.dot(col("xh"), col("xh"))), col("qnorm")), 6)
-            .as("cosine"))
-    } else {
-      val qq = withScale(Similarity.normed(queries), "v")
-        .select(col("vec_id").as("query_id"), sqBytes("v").as("qqb"))
-      codes.join(broadcast(probes), Seq("cell"))
-        .where(col("vec_id") =!= col("query_id"))
-        .join(broadcast(qq), "query_id")
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          (sqDot(col("qb"), col("qqb")) * col("r")).as("cosine"))
-    }
-  }
+                              candWhere: Column = lit(true)): DataFrame =
+    serve(spark, path, queries, k, nProbe, candWhere,
+      rerank = Some(Similarity.autoRerank(k, rerank)))(mrlOf)
 
   /** Answer a query batch from the stored SQ codes: probed-cell
     * partitions only, candidates ranked by the store's own coding
-    * ([[sqScored]]). Output (query_id, neighbor_id, score, rank) — ONE
+    * ([[scoreKernel]]). Output (query_id, neighbor_id, score, rank) — ONE
     * contract for both codings; `score` is the dequantized cosine on a
     * residual store and the rescaled integer dot (a rank-only surrogate,
     * not a true cosine) on an absolute store. `asOfSeq` is the
@@ -1213,13 +1129,10 @@ object Index {
   def ivfSqTopKIndexed(spark: SparkSession, path: String, queries: DataFrame,
                        k: Int, nProbe: Int = 4,
                        candWhere: Column = lit(true),
-                       asOfSeq: Option[Long] = None): DataFrame = {
-    val (probes, q) = probeSet(spark, path, queries, nProbe)
-    Similarity.topK(
-      sqScored(spark, path, probes, q, queries, candWhere, asOfSeq), k)
+                       asOfSeq: Option[Long] = None): DataFrame =
+    serve(spark, path, queries, k, nProbe, candWhere, asOfSeq)(sqOf)
       .select(col("query_id"), col("neighbor_id"),
         col("cosine").as("score"), col("rank"))
-  }
 
   /** Drop every generation of `kind` (used by an in-place REBUILD: the
     * overwrite save targets the flat v0 directory, so stale higher
@@ -1253,13 +1166,25 @@ object Index {
     */
   private[graft] def dropStoreCommits(spark: SparkSession,
                                       path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
+    pruneCommits(spark, path, Set.empty); ()
+  }
+
+  /** Delete every store-level `commit_v<n>` marker whose version `n` is
+    * not in `keepVers` — the markers no surviving generation needs.
+    * Returns the bytes the deleted markers held.
+    */
+  private def pruneCommits(spark: SparkSession, path: String,
+                           keepVers: Set[String]): Long = {
+    val root = new org.apache.hadoop.fs.Path(path)
     val fs = fsOf(spark, root)
-    if (fs.exists(root))
-      fs.listStatus(root).toSeq
-        .filter(st => st.isFile && st.getPath.getName.startsWith("commit_v"))
-        .foreach { st => fs.delete(st.getPath, false); () }
+    if (!fs.exists(root)) 0L
+    else fs.listStatus(root).toSeq
+      .filter { st =>
+        val name = st.getPath.getName
+        st.isFile && name.startsWith("commit_v") &&
+          !keepVers.contains(name.stripPrefix("commit_v"))
+      }
+      .map { st => fs.delete(st.getPath, false); st.getLen }.sum
   }
 
   /** Append-vs-compaction fence. The refresh paths resolve the live
@@ -1659,8 +1584,10 @@ object Index {
     val hadPq = hasLive(spark, path, PqCodesKind)
     val hadSq = hasLive(spark, path, SqCodesKind)
     // read every flavor's build config BEFORE any marker is rewritten
-    val pqMeta = readBuildMeta(spark, metaPath(path))
-    val sqMeta = readBuildMeta(spark, sqMetaPath(path))
+    // (`m` caches the rows, so the resolvers below see the same ones)
+    val m = new Markers(spark, path)
+    val pqMeta = buildMetaOf(m.pq)
+    val sqMeta = buildMetaOf(m.sq)
     // the coarse geometry — centroid training AND the assignment mode —
     // belongs to whichever marker owns it (PQ, else SQ, else IVF): a
     // flat-built store re-assigned two-level would route whole families
@@ -1669,9 +1596,9 @@ object Index {
     val geo =
       if (hadPq) pqMeta
       else if (hadSq) sqMeta
-      else readBuildMeta(spark, ivfMetaPath(path))
+      else buildMetaOf(m.ivf)
     // the mrl_meta marker is build-shape-only and stays in place
-    val mrl = if (hasLive(spark, path, MrlCodesKind)) Seq(mrlMeta(spark, path)) else Nil
+    val mrl = if (hasLive(spark, path, MrlCodesKind)) Seq(mrlOf(m)) else Nil
     // rows republished under surviving tombstones must outrank them
     val stampSeq = Tombstones.nextSeq(spark, path)
     // a mutation that slipped in between the caller's snapshot and this
@@ -1706,11 +1633,11 @@ object Index {
       trainIters = geo.trainIters, forceFlat = geo.flat,
       superProbe = Similarity.defaultSuperProbe, metaCols = meta,
       insSeq = stampSeq) { (a, cents) =>
-      (if (hadPq) Seq(Pq(pqCodebook(corpus, stage, a, cents, pqMeta.nSub,
-        pqMeta.nCode, pqMeta.trained, pqMeta.trainIters, pqMeta.residual),
-        pqMeta.residual)) else Nil) ++
+      (if (hadPq) Seq(pqOf(m, pqCodebook(corpus, stage, a, cents,
+        pqMeta.nSub, pqMeta.nCode, pqMeta.trained, pqMeta.trainIters,
+        pqMeta.residual))) else Nil) ++
         (if (withRaw) Seq(Raw) else Nil) ++
-        (if (hadSq) Seq(Sq(sqMeta.residual)) else Nil) ++ mrl
+        (if (hadSq) Seq(sqOf(m)) else Nil) ++ mrl
     }
     midHook()
     // the conflict fence: everything above read a snapshot of the store;
@@ -1784,16 +1711,9 @@ object Index {
         if (!keep.contains(p.getName)) { fs.delete(p, true); () }
       }
     }
-    // prune store-level commit markers no surviving generation needs
-    val keepVers: Set[String] = Set(n.toString) ++ prevLive.values.flatten
+    pruneCommits(spark, path, Set(n.toString) ++ prevLive.values.flatten
       .map(_.getName).filter(_.contains("_v"))
-      .map(nm => nm.substring(nm.lastIndexOf("_v") + 2))
-    fs.listStatus(root).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith("commit_v"))
-      .foreach { st =>
-        val v = st.getPath.getName.stripPrefix("commit_v")
-        if (!keepVers.contains(v)) { fs.delete(st.getPath, false); () }
-      }
+      .map(nm => nm.substring(nm.lastIndexOf("_v") + 2)))
     fs.delete(new Path(stage), true); ()
   }
 
@@ -1968,17 +1888,7 @@ object Index {
         }
       }
     }
-    // prune store-level commit markers no surviving generation needs
-    if (fs.exists(root))
-      fs.listStatus(root).toSeq
-        .filter(st => st.isFile && st.getPath.getName.startsWith("commit_v"))
-        .foreach { st =>
-          val v = st.getPath.getName.stripPrefix("commit_v")
-          if (!keptVers.contains(v)) {
-            bytes += st.getLen
-            fs.delete(st.getPath, false); ()
-          }
-        }
+    bytes += pruneCommits(spark, path, keptVers.toSet)
     Tombstones.collapseSeq(spark, path)
     Seq((dirsRemoved, bytes)).toDF("generations_removed", "bytes_reclaimed")
   }
@@ -2186,8 +2096,7 @@ object Index {
     */
   def probeCells(spark: SparkSession, path: String, queries: DataFrame,
                  nProbe: Int = 4): Array[Long] =
-    probeSet(spark, path, queries, nProbe)._1
-      .select("cell").distinct().collect().map(_.getLong(0))
+    probeSet(spark, path, queries, nProbe).cells
 
   /** TIME-TRAVEL candidate bound: restrict a serve's candidate rows to
     * those inserted at or before `asOfSeq` (build rows are seq 0, every
@@ -2257,25 +2166,8 @@ object Index {
   def ivfTopKIndexed(spark: SparkSession, path: String, queries: DataFrame,
                      k: Int, nProbe: Int = 4,
                      candWhere: Column = lit(true),
-                     asOfSeq: Option[Long] = None): DataFrame = {
-    val (probes, q) = probeSet(spark, path, queries, nProbe)
-    // tombstone mask BEFORE ranking: a deleted row must not consume a
-    // top-k slot (rank-then-filter would return short results)
-    val post = Tombstones.mask(
-      asOfCandidates(
-        prunedToProbes(spark, liveDir(spark, path, PostingsKind),
-          probedCellVals(probes)).where(candWhere), asOfSeq),
-      asOfTombstones(spark, path, asOfSeq), "vec_id")
-    val qv = q.select(col("vec_id").as("query_id"), col("v").as("qv"),
-      col("norm").as("qnorm"))
-    val scored = post.join(broadcast(probes), Seq("cell"))
-      .where(col("vec_id") =!= col("query_id"))
-      .join(broadcast(qv), "query_id")
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(Similarity.safeCosine(VecFold.dot(col("v"), col("qv")),
-          col("norm"), col("qnorm")), 6).as("cosine"))
-    Similarity.topK(scored, k).select("query_id", "neighbor_id", "cosine", "rank")
-  }
+                     asOfSeq: Option[Long] = None): DataFrame =
+    serve(spark, path, queries, k, nProbe, candWhere, asOfSeq)(_ => Raw)
 
   /** Answer a query batch from a stored IVF-PQ index: probed-cell code
     * partitions only, per-query ADC lookup table over the stored
@@ -2285,84 +2177,14 @@ object Index {
     */
   def ivfPqTopKIndexed(spark: SparkSession, path: String, queries: DataFrame,
                        k: Int, nProbe: Int = 4,
-                       candWhere: Column = lit(true)): DataFrame = {
-    val (probes, q) = probeSet(spark, path, queries, nProbe)
-    adcRanked(spark, path, probes, q, k, candWhere)
-  }
+                       candWhere: Column = lit(true)): DataFrame =
+    serve(spark, path, queries, k, nProbe, candWhere)(livePq(spark, path))
 
-  /** The ADC ranking over a stored code layout for an already-computed
-    * probe set — shared by [[ivfPqTopKIndexed]] (the whole serve) and
-    * [[ivfPqRerankTopKIndexed]] (its shortlist stage, which must reuse
-    * the probe set so the refine prune reads the same cells).
+  /** [[pqOf]] against the store's live codebook — the PQ serves' and
+    * [[appendIvfPq]]'s codec.
     */
-  private def adcRanked(spark: SparkSession, path: String, probes: DataFrame,
-                        q: DataFrame, k: Int, candWhere: Column): DataFrame = {
-    // tombstone mask before ranking (see ivfTopKIndexed)
-    val codes = Tombstones.mask(
-      prunedToProbes(spark, liveDir(spark, path, PqCodesKind),
-        probedCellVals(probes)).where(candWhere),
-      Tombstones.readAll(spark, path), "vec_id")
-      .select("vec_id", "sub", "code", "cell")
-    val cw = spark.read.parquet(codewordsDir(spark, path))
-    // ONE marker read answers both nSub and the residual flag — the
-    // marker records the build's n_sub (rebuild already trusts it), and
-    // the distinct-count over the codewords it replaces was a full
-    // shuffle job on every ADC serve. A store with NO marker (or a
-    // legacy marker predating the n_sub column) falls back to that
-    // distinct count: trusting the BuildMeta default would silently
-    // mis-slice subvectors on a non-default legacy store (ADVICE r15) —
-    // the shuffle is the legacy-only price of not returning garbage.
-    val metaRow = readMetaRow(spark, metaPath(path))
-    val meta = buildMetaOf(metaRow)
-    val nSub =
-      if (metaRow.exists(_._1.contains("n_sub"))) meta.nSub
-      else cw.select("sub").distinct().count().toInt
-    // per-query ADC lookup table, exactly the inline construction:
-    // d2(query subvector, codeword) scaled to an exact int64
-    val dim = q.select(size(col("v")).as("d")).limit(1)
-      .collect().headOption.map(_.getInt(0)).getOrElse(0)
-    val sub = dim / nSub
-    val adc =
-      if (meta.residual) {
-        // residual LUT: keyed by (query, PROBED CELL) — the query's own
-        // residual against that cell's centroid, measured to each
-        // codeword. nq·nProbe·nSub·nCode entries, query-bounded.
-        val rsub = slice(col("rv"), col("sub").cast("int") * sub + 1, lit(sub))
-        val lut = probes
-          .join(broadcast(spark.read.parquet(centroidsDir(spark, path))
-            .select(col("cid").as("cell"), col("cv"))), "cell")
-          .join(q.select(col("vec_id").as("query_id"), col("v")), "query_id")
-          .select(col("query_id"), col("cell"),
-            VecQuant.sub(col("v"), col("cv")).as("rv"))
-          .crossJoin(broadcast(cw))
-          .select(col("query_id"), col("cell"), col("sub"), col("code"),
-            floor(VecFold.l2sq(rsub, col("cw")) * 1e9 + 0.5).cast("long").as("d2i"))
-        codes.join(broadcast(probes), Seq("cell"))
-          .where(col("vec_id") =!= col("query_id"))
-          .join(broadcast(lut), Seq("query_id", "cell", "sub", "code"))
-          .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-          .agg(sum("d2i").as("adc_e9"))
-      } else {
-        val qsub = slice(col("v"), col("sub").cast("int") * sub + 1, lit(sub))
-        val lut = q.select(col("vec_id").as("query_id"), col("v"))
-          .crossJoin(broadcast(cw))
-          .select(col("query_id"), col("sub"), col("code"),
-            floor(VecFold.l2sq(qsub, col("cw")) * 1e9 + 0.5).cast("long").as("d2i"))
-        codes.join(broadcast(probes), Seq("cell"))
-          .where(col("vec_id") =!= col("query_id"))
-          .join(broadcast(lut), Seq("query_id", "sub", "code"))
-          .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-          .agg(sum("d2i").as("adc_e9"))
-      }
-    val byDist = Seq(asc("adc_e9"), asc("neighbor_id"))
-    val pre = Window.partitionBy(col("query_id"), pmod(col("neighbor_id"), lit(64)))
-      .orderBy(byDist: _*)
-    val fin = Window.partitionBy("query_id").orderBy(byDist: _*)
-    adc
-      .withColumn("r1", row_number().over(pre)).where(col("r1") <= k).drop("r1")
-      .withColumn("rank", row_number().over(fin)).where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "adc_e9", "rank")
-  }
+  private def livePq(spark: SparkSession, path: String)(m: Markers): Pq =
+    pqOf(m, spark.read.parquet(codewordsDir(spark, path)))
 
   /** The production compressed-serve shape on the PERSISTED store (cf.
     * FAISS IndexIVFPQ + IndexRefineFlat; inline eval twin:
@@ -2383,56 +2205,19 @@ object Index {
   def ivfPqRerankTopKIndexed(spark: SparkSession, path: String,
                              queries: DataFrame, k: Int, rerank: Int = 0,
                              nProbe: Int = 4,
-                             candWhere: Column = lit(true)): DataFrame = {
+                             candWhere: Column = lit(true)): DataFrame =
     // rerank <= 0 resolves to the measured max(10·k, 40) depth rule
     // ([[Similarity.autoRerank]]): the old fixed 4·k default served
     // recall@10 = 0.49 on the separation-free jitter corpus while 10·k
     // recovers 1.0 at flat cost — the shortlist is query-bounded either
     // way, so the deeper default buys recall for ~nothing
-    val depth = Similarity.autoRerank(k, rerank)
-    val (probes, q) = probeSet(spark, path, queries, nProbe)
-    val short = adcRanked(spark, path, probes, q, depth, candWhere)
-      .select("query_id", "neighbor_id")
-    refineExact(spark, path, probes, q, short, k)
-  }
-
-  /** The exact-cosine refine stage shared by the PQ and SQ rerank
-    * serves: fetch ONLY the broadcast shortlist's raw vectors from the
-    * co-located `postings/` flavor (probed-cell partition prune + the
-    * nq·rerank semi-join — refine cost independent of corpus size),
-    * score with the exact cosine, re-rank.
-    */
-  private def refineExact(spark: SparkSession, path: String,
-                          probes: DataFrame, q: DataFrame,
-                          short: DataFrame, k: Int): DataFrame = {
-    val raw = generations(spark, path, PostingsKind)
-    require(raw.nonEmpty,
-      s"rerank serve needs the raw-vector flavor co-located at $path — " +
-        "build the store with withRaw = true (or saveIvf on the same path)")
-    // every shortlisted candidate came from a probed cell, so the refine
-    // scan prunes to the same cell directories the shortlist read. The
-    // mask applies HERE too, not just to the shortlist: an upserted id
-    // has a masked stale raw row co-resident with its live one, and the
-    // id-equijoin below would otherwise refine against both
-    val post = Tombstones.mask(
-      prunedToProbes(spark, liveDir(spark, path, PostingsKind),
-        probedCellVals(probes)),
-      Tombstones.readAll(spark, path), "vec_id")
-      .select(col("vec_id").as("neighbor_id"), col("v"), col("norm"))
-    val qv = q.select(col("vec_id").as("query_id"), col("v").as("qv"),
-      col("norm").as("qnorm"))
-    val scored = post.join(broadcast(short), Seq("neighbor_id"))
-      .join(broadcast(qv), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(Similarity.safeCosine(VecFold.dot(col("v"), col("qv")),
-          col("norm"), col("qnorm")), 6).as("cosine"))
-    Similarity.topK(scored, k).select("query_id", "neighbor_id", "cosine", "rank")
-  }
+    serve(spark, path, queries, k, nProbe, candWhere,
+      rerank = Some(Similarity.autoRerank(k, rerank)))(livePq(spark, path))
 
   /** SQ8 shortlist + exact refine — the SQ tier's deployment
     * composition ([[ivfPqRerankTopKIndexed]]'s shape with the SQ
     * ranking as the shortlist stage). The shortlist goes through the
-    * same coding-aware kernel as the plain serve ([[sqScored]]), so a
+    * same coding-aware kernel as the plain serve ([[scoreKernel]]), so a
     * residual store shortlists by its dequantized cosine — never by the
     * absolute integer dot over residual-coded bytes. Where the int8
     * resolution limit blurs within-family order (SCALING.md round 12's
@@ -2441,14 +2226,182 @@ object Index {
   def ivfSqRerankTopKIndexed(spark: SparkSession, path: String,
                              queries: DataFrame, k: Int, rerank: Int = 0,
                              nProbe: Int = 4,
-                             candWhere: Column = lit(true)): DataFrame = {
+                             candWhere: Column = lit(true)): DataFrame =
     // rerank <= 0 → max(10·k, 40) ([[Similarity.autoRerank]]; measured
     // rationale at [[ivfPqRerankTopKIndexed]])
-    val depth = Similarity.autoRerank(k, rerank)
-    val (probes, q) = probeSet(spark, path, queries, nProbe)
-    val short = Similarity.topK(
-      sqScored(spark, path, probes, q, queries, candWhere), depth)
-      .select("query_id", "neighbor_id")
-    refineExact(spark, path, probes, q, short, k)
+    serve(spark, path, queries, k, nProbe, candWhere,
+      rerank = Some(Similarity.autoRerank(k, rerank)))(sqOf)
+
+  /** THE persisted read path — every serve above is this with its
+    * flavor's `codec` (a resolver over the store's markers: [[pqOf]],
+    * [[sqOf]], [[mrlOf]], or the raw flavor):
+    *   1. probe: rank the stored centroids per query ([[probeSet]]);
+    *   2. candidates: the probed cells' rows of the flavor's kind, the
+    *      filters pushed into the scan, tombstones masked
+    *      ([[candidates]]);
+    *   3. score: the flavor's kernel ([[scoreKernel]]);
+    *   4. top-k: [[Similarity.topK]] — ascending integer distance for
+    *      PQ, descending score otherwise;
+    *   5. refine (rerank serves only): the `rerank`-deep shortlist is
+    *      re-scored exactly from the raw flavor ([[refineExact]]).
+    * Output: (query_id, neighbor_id, cosine | adc_e9, rank).
+    */
+  private def serve(spark: SparkSession, path: String, queries: DataFrame,
+                    k: Int, nProbe: Int, candWhere: Column,
+                    asOfSeq: Option[Long] = None,
+                    rerank: Option[Int] = None)
+                   (codec: Markers => Enc): DataFrame = {
+    val p = probeSet(spark, path, queries, nProbe)
+    val enc = codec(new Markers(spark, path))
+    val scored = scoreKernel(spark, path, enc,
+      candidates(spark, path, enc.kind, p, candWhere, asOfSeq), p, queries)
+    val depth = rerank.getOrElse(k)
+    val top = enc match {
+      case _: Pq =>
+        Similarity.topK(scored, depth, Seq(asc("adc_e9"), asc("neighbor_id")))
+      case _ => Similarity.topK(scored, depth)
+    }
+    rerank.fold(top)(_ =>
+      refineExact(spark, path, p, top.select("query_id", "neighbor_id"), k))
+  }
+
+  /** Step 2 of [[serve]]: the probed cells' rows of `kind` — the
+    * partition prune, `candWhere` and the time-travel bound all land in
+    * the parquet scan — with the tombstones visible at `asOfSeq` masked
+    * BEFORE ranking: a deleted row must not consume a top-k slot
+    * (rank-then-filter would return short results).
+    */
+  private def candidates(spark: SparkSession, path: String, kind: String,
+                         p: Probes, candWhere: Column,
+                         asOfSeq: Option[Long]): DataFrame =
+    Tombstones.mask(
+      asOfCandidates(
+        prunedToProbes(spark, liveDir(spark, path, kind), p.cells)
+          .where(candWhere), asOfSeq),
+      asOfTombstones(spark, path, asOfSeq), "vec_id")
+
+  /** The live centroids as a (cell, cv) join table — the residual
+    * kernels' subtrahend.
+    */
+  private def centroidTable(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(centroidsDir(spark, path))
+      .select(col("cid").as("cell"), col("cv"))
+
+  /** The normalized query side of every exact cosine: (query_id, qv, qnorm). */
+  private def queryVecs(p: Probes): DataFrame =
+    p.q.select(col("vec_id").as("query_id"), col("v").as("qv"),
+      col("norm").as("qnorm"))
+
+  /** The 6-dp exact cosine of candidate vector `x` against query `qx`. */
+  private def cosine6(x: Column, xn: Column, qx: Column, qn: Column): Column =
+    round(Similarity.safeCosine(VecFold.dot(x, qx), xn, qn), 6).as("cosine")
+
+  /** Step 3 of [[serve]], the flavor's scoring kernel: every candidate
+    * joined to the queries probing its cell (a stored vector never
+    * answers its own query — the inline self-exclusion contract) and to
+    * the query side, scored as (query_id, neighbor_id, cosine) — or
+    * adc_e9 for PQ.
+    *   - Raw: the exact cosine.
+    *   - SQ absolute, quantized MRL: the EXACT integer code dot × the
+    *     stored rescale factor, the query (prefix) coded like the stored
+    *     one ([[withScale]], [[sqBytes]]). A rank-only surrogate, not a
+    *     true cosine: the query-side factor is constant per query and
+    *     cannot reorder, so it is rank-equal to [[Similarity.int8TopK]]
+    *     restricted to the probed cells. Exact in Long (|q| ≤ 127), so
+    *     order-free and bit-reproducible.
+    *   - SQ residual: reconstruct x̂ = c + qb·r/127 per candidate, then
+    *     the true cosine against the FLOAT query (asymmetric distance —
+    *     the query is never quantized).
+    *   - Raw MRL: the prefix cosine, truncated exactly as
+    *     [[Similarity.matryoshkaRecall]] truncates.
+    *   - PQ: the ADC lookup table — 1e9-scaled squared distance of each
+    *     query subvector to each codeword, summed as exact int64s; on a
+    *     residual store the table is keyed per (query, PROBED CELL) over
+    *     the query's own residual against that cell's centroid
+    *     (nq·nProbe·nSub·nCode entries, still query-bounded). No raw
+    *     corpus vector is read.
+    */
+  private def scoreKernel(spark: SparkSession, path: String, enc: Enc,
+                          cands: DataFrame, p: Probes,
+                          queries: DataFrame): DataFrame = {
+    def probed(c: DataFrame, qs: DataFrame, on: Seq[String]) =
+      c.join(broadcast(p.pairs), Seq("cell"))
+        .where(col("vec_id") =!= col("query_id"))
+        .join(broadcast(qs), on)
+    def scored(c: DataFrame, qs: DataFrame, score: Column) =
+      probed(c, qs, Seq("query_id"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"), score)
+    def codeDot(src: DataFrame, x: String) =
+      scored(cands, withScale(src, x)
+          .select(col("vec_id").as("query_id"), sqBytes(x).as("qqb")),
+        (VecQuant.byteDot(col("qb"), col("qqb")) * col("r")).as("cosine"))
+    def prefix(dims: Int) =
+      slice(col("embedding").cast("array<double>"), 1, dims)
+    enc match {
+      case Raw =>
+        scored(cands, queryVecs(p),
+          cosine6(col("v"), col("norm"), col("qv"), col("qnorm")))
+      case Sq(false) => codeDot(p.q, "v")
+      case Sq(true) =>
+        val xhat = cands.join(broadcast(centroidTable(spark, path)), "cell")
+          .withColumn("xh",
+            VecQuant.reconstruct(col("cv"), col("qb"), col("r")))
+        scored(xhat, queryVecs(p), cosine6(col("xh"),
+          sqrt(VecFold.dot(col("xh"), col("xh"))), col("qv"), col("qnorm")))
+      case Mrl(dims, true) =>
+        codeDot(queries.select(col("vec_id"), prefix(dims).as("pv")), "pv")
+      case Mrl(dims, false) =>
+        val qp = queries.select(col("vec_id").as("query_id"),
+            prefix(dims).as("qpv"))
+          .withColumn("qpn", sqrt(VecFold.dot(col("qpv"), col("qpv"))))
+        scored(cands, qp,
+          cosine6(col("vp"), col("vpn"), col("qpv"), col("qpn")))
+      case pq: Pq =>
+        val dim = p.q.select(size(col("v")).as("d")).limit(1)
+          .collect().headOption.map(_.getInt(0)).getOrElse(0)
+        val sub = dim / pq.nSub
+        val (qs, x, keys) =
+          if (pq.residual)
+            (p.pairs.join(broadcast(centroidTable(spark, path)), "cell")
+              .join(p.q.select(col("vec_id").as("query_id"), col("v")),
+                "query_id")
+              .select(col("query_id"), col("cell"),
+                VecQuant.sub(col("v"), col("cv")).as("rv")),
+              "rv", Seq("query_id", "cell"))
+          else (p.q.select(col("vec_id").as("query_id"), col("v")), "v",
+            Seq("query_id"))
+        val xsub = slice(col(x), col("sub").cast("int") * sub + 1, lit(sub))
+        val on = keys ++ Seq("sub", "code")
+        val lut = qs.crossJoin(broadcast(pq.codebook))
+          .select(on.map(col) :+ floor(VecFold.l2sq(xsub, col("cw")) * 1e9 +
+            0.5).cast("long").as("d2i"): _*)
+        probed(cands.select("vec_id", "sub", "code", "cell"), lut, on)
+          .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
+          .agg(sum("d2i").as("adc_e9"))
+    }
+  }
+
+  /** Step 5 of [[serve]], the exact-cosine refine every rerank serve
+    * ends in: fetch ONLY the broadcast shortlist's raw vectors from the
+    * co-located `postings/` flavor (probed-cell partition prune + the
+    * nq·rerank semi-join — refine cost independent of corpus size),
+    * score with the exact cosine, re-rank.
+    */
+  private def refineExact(spark: SparkSession, path: String, p: Probes,
+                          short: DataFrame, k: Int): DataFrame = {
+    require(generations(spark, path, PostingsKind).nonEmpty,
+      s"rerank serve needs the raw-vector flavor co-located at $path — " +
+        "build the store with withRaw = true (or saveIvf on the same path)")
+    // every shortlisted candidate came from a probed cell, so the refine
+    // scan prunes to the same cell directories the shortlist read. The
+    // mask applies HERE too, not just to the shortlist: an upserted id
+    // has a masked stale raw row co-resident with its live one, and the
+    // id-equijoin below would otherwise refine against both
+    val post = candidates(spark, path, PostingsKind, p, lit(true), None)
+      .select(col("vec_id").as("neighbor_id"), col("v"), col("norm"))
+    Similarity.topK(post.join(broadcast(short), Seq("neighbor_id"))
+      .join(broadcast(queryVecs(p)), "query_id")
+      .select(col("query_id"), col("neighbor_id"),
+        cosine6(col("v"), col("norm"), col("qv"), col("qnorm"))), k)
   }
 }

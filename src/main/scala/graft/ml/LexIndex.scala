@@ -695,13 +695,7 @@ object LexIndex {
           1e6 + 0.5).cast("long").as("c_micro"))
     val scored = contrib.groupBy("query_id", "doc_id")
       .agg(sum("c_micro").as("score_micro"))
-    val order = Seq(desc("score_micro"), asc("doc_id"))
-    val pre = Window.partitionBy(col("query_id"), pmod(col("doc_id"), lit(64)))
-      .orderBy(order: _*)
-    val fin = Window.partitionBy("query_id").orderBy(order: _*)
-    scored
-      .withColumn("r1", row_number().over(pre)).where(col("r1") <= k).drop("r1")
-      .withColumn("rank", row_number().over(fin)).where(col("rank") <= k)
+    Similarity.topK(scored, k, Seq(desc("score_micro"), asc("doc_id")), "doc_id")
       .select("query_id", "doc_id", "score_micro", "rank")
   }
 

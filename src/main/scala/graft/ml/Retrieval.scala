@@ -160,15 +160,7 @@ object Retrieval {
           1e6 + 0.5).cast("long").as("c_micro"))
     val scored = contrib.groupBy("query_id", "doc_id")
       .agg(sum("c_micro").as("score_micro"))
-    // two-stage top-k (Similarity.topK shape): 64-way bucketed pre-prune
-    // bounds the final per-query window's input to 64·k rows
-    val order = Seq(desc("score_micro"), asc("doc_id"))
-    val pre = Window.partitionBy(col("query_id"), pmod(col("doc_id"), lit(64)))
-      .orderBy(order: _*)
-    val fin = Window.partitionBy("query_id").orderBy(order: _*)
-    scored
-      .withColumn("r1", row_number().over(pre)).where(col("r1") <= k).drop("r1")
-      .withColumn("rank", row_number().over(fin)).where(col("rank") <= k)
+    Similarity.topK(scored, k, Seq(desc("score_micro"), asc("doc_id")), "doc_id")
       .select("query_id", "doc_id", "score_micro", "rank")
   }
 

@@ -71,16 +71,19 @@ object Similarity {
     emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("norm", sqrt(VecFold.dot(col("v"), col("v"))))
 
-  /** Two-phase top-k per query: rank within a salt bucket first (bounded
-    * partitions), then globally among the <= 64·k survivors. Identical
-    * result to a single global rank, but the corpus-sized sort is
-    * distributed over 64 buckets per query.
+  /** Two-phase top-k per query: rank within a salt bucket of the `id`
+    * column first (bounded partitions), then globally among the <= 64·k
+    * survivors — the pruned-candidate top-k every ranked candidate set
+    * here ends in (dense, ADC, BM25). Identical result to a single
+    * global rank by `order`, but the corpus-sized sort is distributed
+    * over 64 buckets per query. Adds `rank`.
     */
-  private[ml] def topK(scored: DataFrame, k: Int): DataFrame = {
-    val byScore = Seq(desc("cosine"), asc("neighbor_id"))
-    val pre = Window.partitionBy(col("query_id"), pmod(col("neighbor_id"), lit(64)))
-      .orderBy(byScore: _*)
-    val fin = Window.partitionBy("query_id").orderBy(byScore: _*)
+  private[ml] def topK(scored: DataFrame, k: Int,
+                       order: Seq[Column] = Seq(desc("cosine"), asc("neighbor_id")),
+                       id: String = "neighbor_id"): DataFrame = {
+    val pre = Window.partitionBy(col("query_id"), pmod(col(id), lit(64)))
+      .orderBy(order: _*)
+    val fin = Window.partitionBy("query_id").orderBy(order: _*)
     scored
       .withColumn("r1", row_number().over(pre)).where(col("r1") <= k).drop("r1")
       .withColumn("rank", row_number().over(fin)).where(col("rank") <= k)
@@ -1034,14 +1037,7 @@ object Similarity {
       .join(lut, Seq("query_id", "sub", "code"))
       .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
       .agg(sum("d2i").as("adc_e9"))
-    // two-phase rank (cf. topK), ascending by integer distance
-    val byDist = Seq(asc("adc_e9"), asc("neighbor_id"))
-    val pre = Window.partitionBy(col("query_id"), pmod(col("neighbor_id"), lit(64)))
-      .orderBy(byDist: _*)
-    val fin = Window.partitionBy("query_id").orderBy(byDist: _*)
-    adc
-      .withColumn("r1", row_number().over(pre)).where(col("r1") <= k).drop("r1")
-      .withColumn("rank", row_number().over(fin)).where(col("rank") <= k)
+    topK(adc, k, Seq(asc("adc_e9"), asc("neighbor_id")))
       .select("query_id", "neighbor_id", "adc_e9", "rank")
   }
 

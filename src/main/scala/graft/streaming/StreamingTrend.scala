@@ -5,6 +5,7 @@ import graft.trend.{MannKendall, SeriesTransforms}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import scala.reflect.runtime.universe.TypeTag
 
 /** Structured-Streaming variant of the trend pipeline (SURVEY.md §2.7,
   * build-plan module 10). The reference's models are point-by-point by
@@ -171,8 +172,7 @@ object StreamingTrend {
     def emit(counter: String, originUs: Long, idx: Long, accum: Double): Binned =
       Binned(counter, new java.sql.Timestamp((originUs + idx * coarseUs) / 1000L),
         binSecOut, Rounding.stableIntTruncScalar(accum))
-    binned.selectExpr("counter", "ts", "CAST(duration_sec AS DOUBLE) AS duration_sec",
-        "CAST(count AS DOUBLE) AS count").as[Binned]
+    binnedOf(binned)
       .withWatermark("ts", slack)
       .groupByKey(_.counter)
       .flatMapGroupsWithState[CoarseState, Binned](
@@ -217,30 +217,35 @@ object StreamingTrend {
       }
   }
 
-  /** Stateful point-by-point Poisson-lc scorer over a stream of finalized
-    * bins. Out-of-order bins older than the folded state are dropped (the
-    * upstream watermark makes them impossible in the composed pipeline).
+  /** A finalized bin stream cast to [[Binned]] — every stateful stage's input. */
+  private def binnedOf(binned: DataFrame): Dataset[Binned] = {
+    import binned.sparkSession.implicits._
+    binned.selectExpr("counter", "ts", "CAST(duration_sec AS DOUBLE) AS duration_sec",
+      "CAST(count AS DOUBLE) AS count").as[Binned]
+  }
+
+  /** The keyed in-order scan every point-by-point scorer runs: per
+    * counter, the arriving bins in ts order, minus those at or before the
+    * state's `lastTsUs` (out-of-order bins older than the folded state —
+    * the upstream watermark makes them impossible in the composed
+    * pipeline), each folded by `step(state, bin, binTsUs)` into the next
+    * state — which must record `binTsUs` as its `lastTsUs` — and the
+    * bin's eta; the last state is stored once per trigger.
     */
-  def poissonLcStream(binned: DataFrame, alpha: Double = 0.99): Dataset[Scored] = {
+  private def scoreInOrder[S <: Product : TypeTag](binned: DataFrame, init: S)(
+      lastTsUs: S => Long)(step: (S, Binned, Long) => (S, Double)): Dataset[Scored] = {
     val spark = binned.sparkSession
     import spark.implicits._
-    binned.selectExpr("counter", "ts", "CAST(duration_sec AS DOUBLE) AS duration_sec",
-        "CAST(count AS DOUBLE) AS count").as[Binned]
+    binnedOf(binned)
       .groupByKey(_.counter)
-      .flatMapGroupsWithState[LcState, Scored](OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (counter, rows, state: GroupState[LcState]) =>
-          var st = state.getOption.getOrElse(LcState(Long.MinValue, -1.0))
+      .flatMapGroupsWithState[S, Scored](OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (counter, rows, state: GroupState[S]) =>
+          var st = state.getOption.getOrElse(init)
           val out = rows.toArray.sortBy(_.ts.getTime).iterator
-            .filter(_.ts.getTime * 1000L > st.lastTsUs)
+            .filter(_.ts.getTime * 1000L > lastTsUs(st))
             .map { b =>
-              val mean = st.lastCount
-              val eta =
-                if (mean <= 0.0) 0.0 // no previous bin, or zero mean (models.py:306)
-                else {
-                  val w = PoissonCi.width(alpha, mean)
-                  if (w == 0.0) 0.0 else math.abs(b.count - mean) / w
-                }
-              st = LcState(b.ts.getTime * 1000L, b.count)
+              val (next, eta) = step(st, b, b.ts.getTime * 1000L)
+              st = next
               Scored(counter, b.ts, b.count, Rounding.trim2Scalar(eta))
             }.toVector
           state.update(st)
@@ -248,33 +253,36 @@ object StreamingTrend {
       }
   }
 
+  /** The Poisson models' eta: |x − mean| in units of the `alpha` CI
+    * width; 0 with no (or a zero) mean (models.py:306) or a zero width.
+    */
+  private def poissonEta(alpha: Double, x: Double, mean: Double): Double =
+    if (mean <= 0.0) 0.0
+    else {
+      val w = PoissonCi.width(alpha, mean)
+      if (w == 0.0) 0.0 else math.abs(x - mean) / w
+    }
+
+  /** Stateful point-by-point Poisson-lc scorer over a stream of finalized
+    * bins: the background mean is the previous bin's count.
+    */
+  def poissonLcStream(binned: DataFrame, alpha: Double = 0.99): Dataset[Scored] =
+    scoreInOrder(binned, LcState(Long.MinValue, -1.0))(_.lastTsUs) { (st, b, tsUs) =>
+      (LcState(tsUs, b.count), poissonEta(alpha, b.count, st.lastCount))
+    }
+
   /** Generic buffer-state scorer: folds each finalized bin into the
     * per-counter count buffer (trimmed to `keep` when bounded) and scores
     * it with `etaOf(buffer, runsum)`.
     */
   private def bufferedScorer(binned: DataFrame, keep: Option[Int])(
-      etaOf: (List[Double], Double) => Double): Dataset[Scored] = {
-    val spark = binned.sparkSession
-    import spark.implicits._
-    binned.selectExpr("counter", "ts", "CAST(duration_sec AS DOUBLE) AS duration_sec",
-        "CAST(count AS DOUBLE) AS count").as[Binned]
-      .groupByKey(_.counter)
-      .flatMapGroupsWithState[BufState, Scored](OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (counter, rows, state: GroupState[BufState]) =>
-          var st = state.getOption.getOrElse(BufState(Long.MinValue, Nil, 0.0))
-          val out = rows.toArray.sortBy(_.ts.getTime).iterator
-            .filter(_.ts.getTime * 1000L > st.lastTsUs)
-            .map { b =>
-              val grown = st.counts :+ b.count
-              val kept = keep.fold(grown)(k => grown.takeRight(k))
-              st = BufState(b.ts.getTime * 1000L, kept, st.runsum + b.count)
-              Scored(counter, b.ts, b.count,
-                Rounding.trim2Scalar(etaOf(kept, st.runsum)))
-            }.toVector
-          state.update(st)
-          out.iterator
-      }
-  }
+      etaOf: (List[Double], Double) => Double): Dataset[Scored] =
+    scoreInOrder(binned, BufState(Long.MinValue, Nil, 0.0))(_.lastTsUs) { (st, b, tsUs) =>
+      val grown = st.counts :+ b.count
+      val kept = keep.fold(grown)(k => grown.takeRight(k))
+      val next = BufState(tsUs, kept, st.runsum + b.count)
+      (next, etaOf(kept, next.runsum))
+    }
 
   /** Stateful Mann-Kendall scorer: z over the (windowed) count history at
     * every bin. State is the trailing `windowSize` counts when given,
@@ -320,71 +328,57 @@ object StreamingTrend {
     */
   def linRegStream(binned: DataFrame, minPoints: Int, avgWindow: Int = 1,
                    regWindow: Option[Int] = None,
-                   normByMean: Boolean = false): Dataset[Scored] = {
-    val spark = binned.sparkSession
-    import spark.implicits._
-    binned.selectExpr("counter", "ts", "CAST(duration_sec AS DOUBLE) AS duration_sec",
-        "CAST(count AS DOUBLE) AS count").as[Binned]
-      .groupByKey(_.counter)
-      .flatMapGroupsWithState[LinRegState, Scored](OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (counter, rows, state: GroupState[LinRegState]) =>
-          var st = state.getOption.getOrElse(
-            LinRegState(Long.MinValue, 0L, Nil, Nil, 0L, 0.0, 0.0, 0.0, 0.0, 0.0))
-          val out = rows.toArray.sortBy(_.ts.getTime).iterator
-            .filter(_.ts.getTime * 1000L > st.lastTsUs)
-            .map { b =>
-              val rn = st.rn + 1
-              val recent = (st.recent :+ b.count).takeRight(avgWindow)
-              // Average agg over the trailing frame: ordered sum, then /count
-              val averaged =
-                if (rn >= avgWindow) recent.foldLeft(0.0)(_ + _) / avgWindow.toDouble
-                else 0.0
-              val x = rn.toDouble
-              val (slope, meanY, st2) = regWindow match {
-                case None =>
-                  // expanding frame: one Welford/co-moment step per row
-                  val n2 = st.n + 1
-                  val dx = x - st.xAvg
-                  val dxN = dx / n2
-                  val dy = averaged - st.yAvg
-                  val dyN = dy / n2
-                  val xAvg2 = st.xAvg + dxN
-                  val yAvg2 = st.yAvg + dyN
-                  val ck2 = st.ck + dx * (averaged - yAvg2)
-                  val xM22 = st.xM2 + dx * (x - xAvg2)
-                  val ySum2 = st.ySum + averaged
-                  val sl = (ck2 / n2) / (xM22 / n2)
-                  (sl, ySum2 / n2, st.copy(n = n2, xAvg = xAvg2, yAvg = yAvg2,
-                    ck = ck2, xM2 = xM22, ySum = ySum2))
-                case Some(w) =>
-                  // sliding frame: recompute over the buffer in frame order
-                  val buf = (st.avgBuf :+ averaged).takeRight(w)
-                  var (n2, xa, ya, ck2, m2, ys) = (0L, 0.0, 0.0, 0.0, 0.0, 0.0)
-                  var xi = x - buf.length + 1
-                  buf.foreach { y =>
-                    n2 += 1
-                    val dx = xi - xa
-                    val dy = y - ya
-                    xa += dx / n2
-                    ya += dy / n2
-                    ck2 += dx * (y - ya)
-                    m2 += dx * (xi - xa)
-                    ys += y
-                    xi += 1
-                  }
-                  ((ck2 / n2) / (m2 / n2), ys / n2, st.copy(avgBuf = buf))
-              }
-              val slopeNormed = if (normByMean) slope / meanY else slope
-              val eta =
-                if (rn >= minPoints && math.abs(slopeNormed) >= 1e-12) slopeNormed
-                else 0.0
-              st = st2.copy(lastTsUs = b.ts.getTime * 1000L, rn = rn, recent = recent)
-              Scored(counter, b.ts, b.count, Rounding.trim2Scalar(eta))
-            }.toVector
-          state.update(st)
-          out.iterator
+                   normByMean: Boolean = false): Dataset[Scored] =
+    scoreInOrder(binned,
+        LinRegState(Long.MinValue, 0L, Nil, Nil, 0L, 0.0, 0.0, 0.0, 0.0, 0.0))(
+        _.lastTsUs) { (st, b, tsUs) =>
+      val rn = st.rn + 1
+      val recent = (st.recent :+ b.count).takeRight(avgWindow)
+      // Average agg over the trailing frame: ordered sum, then /count
+      val averaged =
+        if (rn >= avgWindow) recent.foldLeft(0.0)(_ + _) / avgWindow.toDouble
+        else 0.0
+      val x = rn.toDouble
+      val (slope, meanY, st2) = regWindow match {
+        case None =>
+          // expanding frame: one Welford/co-moment step per row
+          val n2 = st.n + 1
+          val dx = x - st.xAvg
+          val dxN = dx / n2
+          val dy = averaged - st.yAvg
+          val dyN = dy / n2
+          val xAvg2 = st.xAvg + dxN
+          val yAvg2 = st.yAvg + dyN
+          val ck2 = st.ck + dx * (averaged - yAvg2)
+          val xM22 = st.xM2 + dx * (x - xAvg2)
+          val ySum2 = st.ySum + averaged
+          val sl = (ck2 / n2) / (xM22 / n2)
+          (sl, ySum2 / n2, st.copy(n = n2, xAvg = xAvg2, yAvg = yAvg2,
+            ck = ck2, xM2 = xM22, ySum = ySum2))
+        case Some(w) =>
+          // sliding frame: recompute over the buffer in frame order
+          val buf = (st.avgBuf :+ averaged).takeRight(w)
+          var (n2, xa, ya, ck2, m2, ys) = (0L, 0.0, 0.0, 0.0, 0.0, 0.0)
+          var xi = x - buf.length + 1
+          buf.foreach { y =>
+            n2 += 1
+            val dx = xi - xa
+            val dy = y - ya
+            xa += dx / n2
+            ya += dy / n2
+            ck2 += dx * (y - ya)
+            m2 += dx * (xi - xa)
+            ys += y
+            xi += 1
+          }
+          ((ck2 / n2) / (m2 / n2), ys / n2, st.copy(avgBuf = buf))
       }
-  }
+      val slopeNormed = if (normByMean) slope / meanY else slope
+      val eta =
+        if (rn >= minPoints && math.abs(slopeNormed) >= 1e-12) slopeNormed
+        else 0.0
+      (st2.copy(lastTsUs = tsUs, rn = rn, recent = recent), eta)
+    }
 
   /** Stateful cycle-mode Poisson scorer: the background mean is the
     * running average of counts sharing the current bin's period key,
@@ -395,9 +389,7 @@ object StreamingTrend {
     */
   def poissonCycleStream(binned: DataFrame, alpha: Double = 0.99,
                          periodList: Seq[String] = Seq("hour")): Dataset[Scored] = {
-    val spark = binned.sparkSession
-    import spark.implicits._
-    val zone = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
+    val zone = java.time.ZoneId.of(binned.sparkSession.sessionState.conf.sessionLocalTimeZone)
     def pkey(ts: java.sql.Timestamp): String = {
       val t = ts.toInstant.atZone(zone)
       periodList.map {
@@ -412,30 +404,11 @@ object StreamingTrend {
         case p => throw new IllegalArgumentException(s"unsupported period attr $p")
       }.mkString(":")
     }
-    binned.selectExpr("counter", "ts", "CAST(duration_sec AS DOUBLE) AS duration_sec",
-        "CAST(count AS DOUBLE) AS count").as[Binned]
-      .groupByKey(_.counter)
-      .flatMapGroupsWithState[CycleState, Scored](OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (counter, rows, state: GroupState[CycleState]) =>
-          var st = state.getOption.getOrElse(CycleState(Long.MinValue, Map.empty))
-          val out = rows.toArray.sortBy(_.ts.getTime).iterator
-            .filter(_.ts.getTime * 1000L > st.lastTsUs)
-            .map { b =>
-              val k = pkey(b.ts)
-              val (num, denom) = st.keys.getOrElse(k, (0.0, 0L))
-              val (n2, d2) = (num + b.count, denom + 1)
-              st = CycleState(b.ts.getTime * 1000L, st.keys.updated(k, (n2, d2)))
-              val mean = n2 / d2
-              val eta =
-                if (mean <= 0.0) 0.0
-                else {
-                  val w = PoissonCi.width(alpha, mean)
-                  if (w == 0.0) 0.0 else math.abs(b.count - mean) / w
-                }
-              Scored(counter, b.ts, b.count, Rounding.trim2Scalar(eta))
-            }.toVector
-          state.update(st)
-          out.iterator
-      }
+    scoreInOrder(binned, CycleState(Long.MinValue, Map.empty))(_.lastTsUs) { (st, b, tsUs) =>
+      val k = pkey(b.ts)
+      val (num, denom) = st.keys.getOrElse(k, (0.0, 0L))
+      val (n2, d2) = (num + b.count, denom + 1)
+      (CycleState(tsUs, st.keys.updated(k, (n2, d2))), poissonEta(alpha, b.count, n2 / d2))
+    }
   }
 }

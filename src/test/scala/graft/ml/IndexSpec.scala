@@ -377,52 +377,59 @@ class IndexSpec extends SparkSpec {
     assert(after === before)
   }
 
-  test("filtered serve = top-k AMONG matches, predicate pushed to the scan") {
-    val path = freshPath("filtered")
-    val withLabel = emb.withColumn("label", pmod(col("vec_id"), lit(3)).cast("int"))
-    Index.saveIvf(withLabel, path, metaCols = Seq("label"))
-    val isQ = pmod(col("vec_id"), lit(10)) === 0
-    val filtered = Index.ivfTopKIndexed(spark, path, emb.where(isQ), k = 5,
-      candWhere = col("label") === 1)
-    val plan = filtered.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("label"),
-      s"label predicate not pushed into the postings scan:\n$plan")
-    val got = filtered.orderBy("query_id", "rank")
-      .as[(Long, Long, Double, Int)].collect().toSeq
-    // reference: UNFILTERED serve deep enough to hold every candidate,
-    // then filter-then-rerank — filter-before-rank semantics, not a
-    // rank-then-filter that could return fewer than k while matches exist
-    val all = Index.ivfTopKIndexed(spark, path, emb.where(isQ), k = 120)
-      .as[(Long, Long, Double, Int)].collect()
-    val expected = all.filter(_._2 % 3 == 1)
-      .groupBy(_._1).toSeq.flatMap { case (qid, rows) =>
-        rows.sortBy(r => (-r._3, r._2)).take(5).zipWithIndex
-          .map { case (r, i) => (qid, r._2, r._3, i + 1) }
-      }.sortBy(r => (r._1, r._4))
-    assert(got === expected)
-    assert(got.forall(_._2 % 3 == 1))
-    assert(got.nonEmpty)
-  }
+  // Filtered serving, one row per store flavor: the candWhere predicate
+  // lands in the store scan (PushedFilters), and the result is the true
+  // top-k AMONG matches — the unfiltered serve deep enough to hold every
+  // candidate, filtered, then re-ranked — never a rank-then-filter that
+  // could return fewer than k while matches exist. Scores compare as
+  // doubles (PQ's adc_e9 is an exact int64 far below 2^53); `ascending`
+  // is PQ's distance order.
+  private case class FilteredRow(name: String, ascending: Boolean,
+                                 save: (DataFrame, String) => Unit,
+                                 serve: (String, DataFrame, Int, Column) => DataFrame)
 
-  test("filtered PQ serve = ADC top-k AMONG matches") {
-    val path = freshPath("pqfiltered")
-    val withLabel = emb.withColumn("label", pmod(col("vec_id"), lit(3)).cast("int"))
-    Index.saveIvfPq(withLabel, path, metaCols = Seq("label"))
-    val isQ = pmod(col("vec_id"), lit(10)) === 0
-    val got = Index.ivfPqTopKIndexed(spark, path, emb.where(isQ), k = 5,
-        candWhere = col("label") === 1)
-      .orderBy("query_id", "rank")
-      .as[(Long, Long, Long, Int)].collect().toSeq
-    val all = Index.ivfPqTopKIndexed(spark, path, emb.where(isQ), k = 120)
-      .as[(Long, Long, Long, Int)].collect()
-    val expected = all.filter(_._2 % 3 == 1)
-      .groupBy(_._1).toSeq.flatMap { case (qid, rows) =>
-        rows.sortBy(r => (r._3, r._2)).take(5).zipWithIndex
-          .map { case (r, i) => (qid, r._2, r._3, i + 1) }
-      }.sortBy(r => (r._1, r._4))
-    assert(got === expected)
-    assert(got.forall(_._2 % 3 == 1))
-    assert(got.nonEmpty)
+  Seq(
+    FilteredRow("filtered serve = top-k AMONG matches, predicate pushed to the scan",
+      ascending = false,
+      (e, p) => Index.saveIvf(e, p, metaCols = Seq("label")),
+      (p, q, k, w) => Index.ivfTopKIndexed(spark, p, q, k, candWhere = w)),
+    FilteredRow("filtered PQ serve = ADC top-k AMONG matches", ascending = true,
+      (e, p) => Index.saveIvfPq(e, p, metaCols = Seq("label")),
+      (p, q, k, w) => Index.ivfPqTopKIndexed(spark, p, q, k, candWhere = w)),
+    FilteredRow("filtered SQ serve (absolute) = code-dot top-k AMONG matches",
+      ascending = false,
+      (e, p) => Index.saveIvfSq(e, p, metaCols = Seq("label")),
+      (p, q, k, w) => Index.ivfSqTopKIndexed(spark, p, q, k, candWhere = w)),
+    FilteredRow("filtered SQ serve (residual) = dequantized top-k AMONG matches",
+      ascending = false,
+      (e, p) => Index.saveIvfSq(e, p, metaCols = Seq("label"), residual = true),
+      (p, q, k, w) => Index.ivfSqTopKIndexed(spark, p, q, k, candWhere = w))
+  ).foreach { row =>
+    test(row.name) {
+      val path = freshPath("filtered")
+      row.save(emb.withColumn("label", pmod(col("vec_id"), lit(3)).cast("int")), path)
+      def rows(df: DataFrame) = df
+        .select(col("query_id"), col("neighbor_id"),
+          col(df.columns(2)).cast("double"), col("rank"))
+        .orderBy("query_id", "rank")
+        .as[(Long, Long, Double, Int)].collect().toSeq
+      val q = emb.where(pmod(col("vec_id"), lit(10)) === 0)
+      val filtered = row.serve(path, q, 5, col("label") === 1)
+      val plan = filtered.queryExecution.executedPlan.toString
+      assert(plan.contains("PushedFilters") && plan.contains("label"),
+        s"label predicate not pushed into the store scan:\n$plan")
+      val got = rows(filtered)
+      val sign = if (row.ascending) 1.0 else -1.0
+      val expected = rows(row.serve(path, q, 120, lit(true)))
+        .filter(_._2 % 3 == 1)
+        .groupBy(_._1).toSeq.flatMap { case (qid, rs) =>
+          rs.sortBy(r => (sign * r._3, r._2)).take(5).zipWithIndex
+            .map { case (r, i) => (qid, r._2, r._3, i + 1) }
+        }.sortBy(r => (r._1, r._4))
+      assert(got === expected)
+      assert(got.forall(_._2 % 3 == 1))
+      assert(got.nonEmpty)
+    }
   }
 
   test("append with metaCols keeps appended vectors visible to a filtered serve") {
